@@ -167,7 +167,7 @@ def one_trial(cores: int, base_version: int) -> dict:
     Warehouse(WH).truncate(base_version)
     spark = get_spark(f"local[{cores}]", f"scaling_{cores}", shuffle_partitions=cores)
     eng = CrawlEngine(spark, CFG, WH, n_partitions=cores)
-    eng._update_bloom(eng.wh.read(spark, "seen", upto=base_version), base_version)
+    eng._update_bloom(eng.wh.read(spark, "seen", upto=base_version))
     t0 = time.monotonic()
     stats = eng.run_waves(base_version, base_version + MEASURE_WAVES)
     wall = time.monotonic() - t0

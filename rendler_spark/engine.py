@@ -10,7 +10,7 @@ DataFrames (BASELINE.json:L6 "Each crawl wave is a batch iteration"):
       ├─ broadcast-join robots → crawl_delay budgets    (B3, C5)
       ├─ salted two-phase per-host top-K window         (E1-E3) — 1 shuffle
       │     fetch set ─────────────┐   deferred rows → frontier(w+1)
-      ├─ mapInPandas fetch+render UDF (Arrow batches)   (A2, H3, H4)
+      ├─ mapInArrow fetch+render UDF (Arrow batches)    (A2, H3, H4)
       │     → images rows (input_hint schema) + packed links
       ├─ posexplode links → canonicalize pandas UDF     (H1, H2)
       │     → edges(w)
@@ -35,17 +35,12 @@ Scale notes (designed for 10^10-URL frontiers, tested on local[32]):
 * the two per-wave shuffles (host-salt window; url_hash dedup/anti-join)
   are the only wide stages; the Bloom/cuckoo prefilter routes the
   overwhelmingly-new candidate mass AROUND the anti-join (SURVEY.md §4.1).
-* ``seen_bucketed=True`` additionally deletes the anti-join's seen-side
-  exchange: a url-bucketed catalog mirror of the seen keys streams into
-  the join from its buckets, so only the wave's candidates shuffle —
-  O(wave) instead of O(seen) recurring bytes (2.21x at 4M-row seen,
-  BENCH/BASELINE.md; default off below the documented crossover).
-* `bloom_mode="broadcast"` ships shard blobs to every executor (right
-  while total blob bytes << executor memory); `"copartition"` cogroups
-  candidates with the shard-blob table on `shard` so each task holds
-  exactly one shard — the shuffle-hash-join-by-hash-prefix path from
-  BASELINE.json:L6.  ``filter_kind`` picks Bloom bits or a cuckoo table
-  (deletion support) behind the same contract (operators/seenfilter.py).
+* the prefilter's shard blobs live on the driver (bits-sized, never
+  row-sized) and are broadcast to every executor (right while total
+  blob bytes << executor memory); ``bloom_mode="off"`` drops the
+  prefilter and leaves the pure exact anti-join.  ``filter_kind`` picks
+  Bloom bits or a cuckoo table (deletion support) behind the same
+  contract (operators/seenfilter.py).
 * ``seq`` lineage is a hex string (crawl_semantics rule 1) — exact BFS
   order at any crawl depth; the int64 encoding wrapped at depth ~14.
 * ``max_render_tasks`` (rule 7) is the reference's global render cutoff:
@@ -64,8 +59,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.accumulators import _accumulatorRegistry
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from rendler_spark import codecs, synthweb, urlnorm
@@ -85,6 +82,10 @@ SEEN_READ_SCHEMA = (
     "url_hash bigint, url string, host string, depth int, seq string, "
     "blocked boolean, shard int, wave int"
 )
+#: the seen table (and its compacted snapshots) is Hive-sub-partitioned by
+#: shard, so the anti-join's seen-side scan can be pruned to the shards
+#: the maybe-seen candidates name
+SEEN_PARTITION_BY = ["shard"]
 PAGE_SCHEMA = (
     "url string, host string, depth int, seq string, links string, "
     "bytes binary, w int, h int, fmt string, caption string, phash bigint"
@@ -163,35 +164,12 @@ def _acc_add_partition_rows(acc, n_rows: int) -> None:
             acc.add({tc.partitionId(): n_rows})
 
 
-def make_fetch_render(cfg: synthweb.WebConfig, acc=None):
-    """mapInPandas wrapper around the fetch/render kernel."""
-
-    def fetch_render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            _acc_add_partition_rows(acc, len(pdf))
-            out = _render_batch(cfg, pdf["url"])
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].to_numpy(),
-                    "host": pdf["host"].to_numpy(),
-                    "depth": pdf["depth"].to_numpy(),
-                    "seq": pdf["seq"].to_numpy(),
-                    **out,
-                }
-            )
-
-    return fetch_render
-
-
 def make_fetch_render_arrow(cfg: synthweb.WebConfig, acc=None):
     """mapInArrow wrapper (SURVEY §2J): the pass-through columns
     (url/host/depth/seq) are re-emitted as the INPUT RecordBatch's own
     arrays — zero copy, no pandas object-column round trip — and the
     produced columns (image bytes etc.) go straight into Arrow arrays.
-    Semantics identical to the pandas wrapper (pinned by
-    tests/test_engine_equivalence.py::test_fetch_udf_modes_agree)."""
+    Shared by the wave loop and the streaming skin."""
     import pyarrow as pa
 
     def fetch_render(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -235,40 +213,6 @@ def make_filter_builder(kind: str, params: dict):
     return build
 
 
-def make_filter_or_reducer(kind: str):
-    """Merge several filter blobs of one shard (incremental update):
-    bitwise OR for Bloom, entry re-insertion for cuckoo."""
-
-    def reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = bytes(pdf["bits"].iloc[0])
-        for b in pdf["bits"].iloc[1:]:
-            acc = seenfilter.merge_blobs(kind, acc, b)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "bits": [acc]})
-
-    return reduce
-
-
-def make_copartition_prefilter(kind: str, params: dict, out_schema: str):
-    """Cogrouped prefilter: each task receives ONE shard's candidates plus
-    that shard's filter blob — the shuffle-hash-join-by-hash-prefix path
-    (BASELINE.json:L6) for when the union of shards exceeds broadcast size.
-    Emits candidate rows + ``_maybe`` (filter verdict)."""
-
-    def flt(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0:
-            maybe = np.zeros(len(cdf), dtype=bool)  # empty shard: all new
-        else:
-            maybe = seenfilter.contains_blob(
-                kind, bytes(bdf["bits"].iloc[0]),
-                cdf["url_hash"].to_numpy(np.int64), params,
-            )
-        out = cdf.copy()
-        out["_maybe"] = maybe
-        return out
-
-    return flt
-
-
 def first_wins(df: DataFrame) -> DataFrame:
     """D3: deterministic first-discovery dedup — min (depth, seq) per URL
     (crawl_semantics rule 4); host rides along (constant per URL)."""
@@ -282,6 +226,21 @@ def first_wins(df: DataFrame) -> DataFrame:
             F.col("m.seq").alias("seq"),
         )
     )
+
+
+def _observed(obs: Observation) -> dict | None:
+    """``obs.get``, or None when the observed plan was empty at runtime
+    and AQE empty-relation propagation folded its CollectMetrics node
+    away.  Spark 4.1.2 then completes the Observation with a schema-less
+    empty Row, which ``PythonSQLUtils.toPyRow`` rejects with a
+    ``java.lang.AssertionError`` (pinned by tests/test_engine_equivalence.py::
+    test_zero_addition_wave_observation_fold); any other error propagates."""
+    try:
+        return obs.get
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        return None
 
 
 # --------------------------------------------------------------- engine
@@ -303,34 +262,18 @@ class CrawlEngine:
         n_shards: int = N_SHARDS,
         bloom_bits: int = 1 << 16,
         bloom_k: int = 6,
-        bloom_mode: str = "broadcast",  # or "copartition" / "off" —
-        # DISTRIBUTION mode of the seen prefilter (either kind)
+        bloom_mode: str = "broadcast",  # or "off" (pure exact anti-join)
         filter_kind: str = "bloom",  # or "cuckoo" (deletion support;
         # north rule names "Bloom/cuckoo" — seenfilter.py dispatch)
         cuckoo_buckets: int = 1 << 13,
         cuckoo_bucket_size: int = 4,
         n_partitions: int | None = None,
         rows_per_fetch_task: int = 64,
-        seen_shard_partition: bool = True,  # Hive-sub-partition seen by shard
         seen_compact_every: int = 8,  # OR-merge seen waves every N (0 = off)
-        fetch_udf: str = "arrow",  # "arrow" (mapInArrow, zero-copy
-        # pass-through) or "pandas" (mapInPandas) — identical semantics
-        seen_join_hint: str | None = None,  # None = let AQE choose (right
-        # while the maybe-seen side is broadcastable); "shuffle_hash" pins
-        # the C2 shuffle-hash-by-hash-prefix plan for 10^10-scale seen sets
         snapshot_keep: int | None = None,  # expire manifests older than the
         # newest N after each wave commit (Iceberg expire_snapshots; bounds
         # metadata growth on a long crawl; None = keep all — required when
         # external tooling rolls back past the horizon, e.g. BENCH/scaling)
-        seen_bucketed: bool = False,  # maintain a url-bucketed catalog
-        # MIRROR of the seen keys so the per-wave anti-join never
-        # re-shuffles the seen side (sources/bucketed.py's layout applied
-        # to the engine's recurring join — VERDICT r4 #2); the Warehouse
-        # parquet stays the source of truth, the mirror is a derived
-        # index synced to the committed version via a marker file and
-        # rebuilt whenever the marker diverges (crash / resume / rollback)
-        seen_buckets: int = 16,  # mirror bucket count (cand shuffles to
-        # this many partitions; thousands at 10^10-URL scale)
     ):
         self.spark = spark
         self.cfg = cfg
@@ -343,6 +286,10 @@ class CrawlEngine:
         self.n_shards = n_shards
         self.bloom_bits = bloom_bits
         self.bloom_k = bloom_k
+        if bloom_mode not in ("broadcast", "off"):
+            raise ValueError(
+                f"bloom_mode must be 'broadcast' or 'off', not {bloom_mode!r}"
+            )
         self.bloom_mode = bloom_mode
         assert filter_kind in seenfilter.KINDS, filter_kind
         self.filter_kind = filter_kind
@@ -354,15 +301,8 @@ class CrawlEngine:
         }
         self.n_partitions = n_partitions or spark.sparkContext.defaultParallelism
         self.rows_per_fetch_task = rows_per_fetch_task
-        self.seen_join_hint = seen_join_hint
-        self.seen_shard_partition = seen_shard_partition
         self.seen_compact_every = seen_compact_every
         self.snapshot_keep = snapshot_keep
-        assert fetch_udf in ("arrow", "pandas"), fetch_udf
-        self.fetch_udf = fetch_udf
-        self._seen_pby = ["shard"] if seen_shard_partition else None
-        self.seen_bucketed = seen_bucketed
-        self.seen_buckets = seen_buckets
         self._wave_cache: list[DataFrame] = []
         self._n_seen_shards_scanned: int | None = None
         self.robots = robots_df(spark, cfg)
@@ -373,97 +313,19 @@ class CrawlEngine:
         self.profile: bool = False
         self.phase_times: list[dict] = []
 
-    # ----------------------------------------------- bucketed seen mirror
-    #
-    # The per-wave anti-join's seen side is the one table that grows
-    # without bound; re-shuffling it every wave is the dominant recurring
-    # exchange at 10^10 URLs.  Spark only elides the shuffle when the
-    # join key EQUALS the bucket key (a superset re-shuffles both sides —
-    # measured on 4.1.2), so the mirror buckets by ``url`` itself and the
-    # bucketed path joins on url alone: exact (string equality, no hash
-    # collision concern) and Exchange-free on the seen side — only the
-    # wave's candidates shuffle (to seen_buckets partitions).  Plan
-    # pinned by tests/test_engine_bucketed_seen.py.
-
-    def _mirror_db(self) -> str:
-        import hashlib
-
-        h = hashlib.md5(str(self.wh.root.resolve()).encode()).hexdigest()[:10]
-        return f"rendler_seenb_{h}"
-
-    def _mirror_table(self) -> str:
-        return f"{self._mirror_db()}.seen_b"
-
-    def _mirror_marker_path(self):
-        return self.wh.root / "seen_mirror.json"
-
-    def _mirror_version(self) -> int | None:
-        import json
-
-        p = self._mirror_marker_path()
-        if not p.exists():
-            return None
-        m = json.loads(p.read_text())
-        if m.get("buckets") != self.seen_buckets:
-            return None  # bucket count changed: force rebuild
-        return int(m["version"])
-
-    def _mirror_write(self, df: DataFrame, mode: str, version: int) -> None:
-        import json
-
-        loc = self.wh.root / "_seen_bucketdb"
-        self.spark.sql(
-            f"CREATE DATABASE IF NOT EXISTS {self._mirror_db()} "
-            f"LOCATION '{loc}'"
-        )
-        (
-            # repartition by the bucket key FIRST: repartition and
-            # bucketBy share the same murmur3 pmod, so every write task
-            # holds exactly one bucket's rows — one file per bucket per
-            # write instead of (tasks x buckets) fragments
-            df.select("url", "url_hash", "shard")
-            .repartition(self.seen_buckets, "url")
-            .write.mode(mode)
-            .bucketBy(self.seen_buckets, "url")
-            .sortBy("url")
-            .saveAsTable(self._mirror_table(), format="parquet")
-        )
-        self._mirror_marker_path().write_text(
-            json.dumps({"version": version, "buckets": self.seen_buckets})
-        )
-
-    def _seen_mirror_df(self, version: int) -> DataFrame:
-        """The seen keys at committed state ``version``, served from the
-        bucketed mirror — synced first if the marker diverges (one full
-        rebuild shuffle, paid only on first use / crash / rollback)."""
-        if self._mirror_version() != version or not self.spark.catalog.tableExists(
-            self._mirror_table()
-        ):
-            # the marker survives on disk but the catalog entry does not
-            # (in-memory session catalog): a resume in a fresh session
-            # rebuilds even with a current marker
-            self._mirror_write(self._read_seen(version), "overwrite", version)
-        return self.spark.table(self._mirror_table())
-
     # ----------------------------------------------------- bloom state
 
     def _update_bloom(
         self,
         additions: DataFrame,
-        version: int,
         wave_dir=None,
         n_rows: int | None = None,
     ) -> None:
-        """Fold a wave's seen-additions into the Bloom state.
+        """Fold a wave's seen-additions into the Bloom state: per-shard
+        blobs merged on the driver (bits-sized, never row-sized), then
+        re-broadcast.
 
-        broadcast mode: bits collected to the driver (bits-sized, never
-        row-sized), OR-merged, re-broadcast.
-        copartition mode: bits live in a ``bloom`` warehouse table,
-        OR-merged distributed — nothing ever gathers on the driver, which
-        is the 10^10-scale requirement.
-
-        Fast path: in broadcast mode the blob bytes end up on the driver
-        anyway, so when the wave's additions are a SMALL just-written
+        Fast path: when the wave's additions are a SMALL just-written
         parquet partition (``wave_dir`` + ``n_rows``), the driver reads
         the two key columns with pyarrow and builds the blobs in-process
         — no Spark job.  Bloom bits are an order-independent OR, so the
@@ -476,10 +338,10 @@ class CrawlEngine:
         if (
             wave_dir is not None
             and n_rows is not None
-            and self.bloom_mode == "broadcast"
             and self.filter_kind == "bloom"
             and n_rows <= 2_000_000
         ):
+            blobs = []
             if n_rows > 0:
                 import pyarrow.dataset as _pads
 
@@ -488,45 +350,26 @@ class CrawlEngine:
                 ).to_table(columns=["url_hash", "shard"])
                 h = tbl["url_hash"].to_numpy(zero_copy_only=False).astype(np.int64)
                 sh = tbl["shard"].to_numpy(zero_copy_only=False).astype(np.int64)
-                for s in np.unique(sh):
-                    cur = seenfilter.build_blob(
+                blobs = [
+                    (int(s), seenfilter.build_blob(
                         self.filter_kind, h[sh == s], self.filter_params
-                    )
-                    prev = self._shard_blobs.get(int(s))
-                    self._shard_blobs[int(s)] = (
-                        cur
-                        if prev is None
-                        else seenfilter.merge_blobs(self.filter_kind, prev, cur)
-                    )
-            if self._bc is not None:
-                self._bc.destroy()
-            self._bc = self.spark.sparkContext.broadcast(dict(self._shard_blobs))
-            return
-        new_bits = (
-            additions.select("shard", "url_hash")
-            .groupBy("shard")
-            .applyInPandas(
-                make_filter_builder(self.filter_kind, self.filter_params),
-                "shard int, bits binary",
-            )
-        )
-        if self.bloom_mode == "copartition":
-            if version > 0 and self.wh.exists("bloom", version - 1):
-                old = self.wh.read(self.spark, "bloom", wave=version - 1).drop("wave")
-                new_bits = (
-                    old.unionByName(new_bits)
-                    .groupBy("shard")
-                    .applyInPandas(
-                        make_filter_or_reducer(self.filter_kind),
-                        "shard int, bits binary",
-                    )
+                    ))
+                    for s in np.unique(sh)
+                ]
+        else:
+            blobs = [
+                (int(r["shard"]), bytes(r["bits"]))
+                for r in additions.select("shard", "url_hash")
+                .groupBy("shard")
+                .applyInPandas(
+                    make_filter_builder(self.filter_kind, self.filter_params),
+                    "shard int, bits binary",
                 )
-            self.wh.overwrite_partition("bloom", version, new_bits)
-            return
-        for r in new_bits.collect():
-            cur = bytes(r["bits"])
-            prev = self._shard_blobs.get(int(r["shard"]))
-            self._shard_blobs[int(r["shard"])] = (
+                .collect()
+            ]
+        for shard, cur in blobs:
+            prev = self._shard_blobs.get(shard)
+            self._shard_blobs[shard] = (
                 cur if prev is None else seenfilter.merge_blobs(self.filter_kind, prev, cur)
             )
         if self._bc is not None:
@@ -552,14 +395,12 @@ class CrawlEngine:
         self,
         candidates: DataFrame,
         seen: DataFrame | None,
-        version: int = 0,
         cand_hint: int | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Dedup candidates against the seen set (C1/C2), gate by robots
         (B3); returns (seen_additions, frontier_additions).
 
         candidates: (url, host, depth, seq), already first-wins-deduped.
-        ``version``: bloom state version to prefilter with (copartition).
         ``cand_hint``: upper bound on the candidate count (the wave's link
         observation).  When it is large relative to ``n_shards`` the
         maybe-seen candidates hit every shard with near-certainty, so the
@@ -575,29 +416,11 @@ class CrawlEngine:
         if seen is not None:
             flagged = None
             if self.bloom_mode == "broadcast" and self._bc is not None:
-                flagged = cand.withColumn(
-                    "_maybe", self._maybe_seen_udf()(F.col("url_hash"))
-                )
-            elif self.bloom_mode == "copartition" and self.wh.exists("bloom", version):
-                bloom_tbl = self.wh.read(self.spark, "bloom", wave=version).drop("wave")
-                out_schema = (
-                    "url string, host string, depth int, seq string, "
-                    "url_hash bigint, shard int, _maybe boolean"
-                )
-                flagged = (
-                    cand.groupBy("shard")
-                    .cogroup(bloom_tbl.groupBy("shard"))
-                    .applyInPandas(
-                        make_copartition_prefilter(
-                            self.filter_kind, self.filter_params, out_schema
-                        ),
-                        out_schema,
-                    )
-                )
-            if flagged is not None:
                 # the prefilter verdict is consumed three times (sure-new
                 # branch, anti-join branch, shard-prune collect): cache it
-                flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
+                flagged = cand.withColumn(
+                    "_maybe", self._maybe_seen_udf()(F.col("url_hash"))
+                ).persist(StorageLevel.MEMORY_AND_DISK)
                 self._wave_cache.append(flagged)
                 # prune the seen-side SCAN to shards that can possibly
                 # match: with the seen table Hive-sub-partitioned by shard
@@ -622,29 +445,19 @@ class CrawlEngine:
                         seen = seen.filter(F.lit(False))
                     elif len(shards) < self.n_shards:
                         seen = seen.filter(F.col("shard").isin(shards))
-            # join on url ALONE on both paths (url equality implies
-            # url_hash equality, so the composite (url_hash, url) key was
-            # redundant).  Bucketed path: the mirror is bucketed by url,
-            # so the (huge) seen side plans with no Exchange.  Plain
-            # path: the candidate side arrives hash-partitioned by url
-            # from the first_wins groupBy, so Catalyst reuses that
-            # partitioning and only the SEEN side shuffles — one fewer
-            # Exchange per wave than the old composite key.
-            join_keys = ["url"]
-            seen_keys = seen.select(*join_keys)
-            if self.seen_join_hint and not self.seen_bucketed:
-                # hints only steer the plain path: a shuffle_hash hint on
-                # the bucketed mirror would force back the very Exchange
-                # the layout exists to delete
-                seen_keys = seen_keys.hint(self.seen_join_hint)
+            # join on url ALONE (url equality implies url_hash equality):
+            # the candidate side arrives hash-partitioned by url from the
+            # first_wins groupBy, so Catalyst reuses that partitioning and
+            # only the SEEN side shuffles
+            seen_keys = seen.select("url")
             if flagged is not None:
                 sure_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
                 need_check = flagged.filter(F.col("_maybe")).drop("_maybe")
                 # exact anti-join is authoritative; bloom only shrinks it
-                checked = need_check.join(seen_keys, join_keys, "left_anti")
+                checked = need_check.join(seen_keys, "url", "left_anti")
                 new = sure_new.unionByName(checked)
             else:
-                new = cand.join(seen_keys, join_keys, "left_anti")
+                new = cand.join(seen_keys, "url", "left_anti")
         else:
             new = cand
         gated = with_robots(new, self.robots)
@@ -674,13 +487,12 @@ class CrawlEngine:
             .filter(F.col("url").rlike("^https?://"))
         )
         seen_add, frontier_add = self._admit(first_wins(df), None)
-        self.wh.overwrite_partition("seen", 0, seen_add, partition_by=self._seen_pby)
+        self.wh.overwrite_partition("seen", 0, seen_add, partition_by=SEEN_PARTITION_BY)
         self.wh.overwrite_partition("frontier", 0, frontier_add)
         self._update_bloom(
             self.wh.read(self.spark, "seen", wave=0),
-            0,
             wave_dir=self.wh.part_dir("seen", 0),
-            n_rows=len(canon),
+            n_rows=self._partition_rows("seen", 0),
         )
         n = self.wh.read(self.spark, "frontier", wave=0).count()
         self.wh.commit(0, {"kind": "init", "n_seeds": len(canon), "n_frontier": n})
@@ -748,8 +560,6 @@ class CrawlEngine:
         ``df.observe`` (no separate count jobs); the frontier size comes
         from the previous wave's manifest — a wave runs ~7 Spark jobs
         regardless of scale (SURVEY.md §4.3)."""
-        from pyspark.sql import Observation
-
         t0 = time.monotonic()
         spark = self.spark
 
@@ -782,282 +592,249 @@ class CrawlEngine:
         flagged = budget_flagged(frontier, n_salt=self.n_salt).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        fetch = flagged.filter(F.col("_fetch")).select(*FRONTIER_COLS)
-        deferred = flagged.filter(~F.col("_fetch")).select(*FRONTIER_COLS)
-        if remaining_cap is not None and remaining_cap < n_frontier:
-            # crawl_semantics rule 7: global cap — allowance goes to the
-            # smallest (depth, host, seq) rows; rest deferred unchanged.
-            # orderBy+limit plans as TakeOrderedAndProject for small caps
-            # and sort+GlobalLimit above the top-k threshold; the anti-join
-            # recovering the remainder broadcasts the (capped) selection.
-            sel = (
-                fetch.orderBy("depth", "host", "seq")
-                .limit(remaining_cap)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            self._wave_cache.append(sel)
-            deferred = deferred.unionByName(
-                fetch.join(sel.select("url"), "url", "left_anti")
-            )
-            fetch = sel
-
-        # ---- fetch + render (Arrow UDF stage); upper-bound the fetch set
-        # by frontier size (and the cap, when binding) to pick the task
-        # count without a count job
-        fetch_ub = n_frontier if remaining_cap is None else min(n_frontier, remaining_cap)
-        nparts = max(
-            1,
-            min(self.n_partitions, math.ceil(fetch_ub / self.rows_per_fetch_task)),
-        )
-        obs_pages = Observation()
-        part_acc = spark.sparkContext.accumulator({}, _PART_COUNT_ACC)
-        # hash- rather than round-robin-repartition: keyless repartition
-        # first pays a local sort of its input for retry determinism
-        # (SPARK-23207); hashing by url is deterministic without it and
-        # spreads uniformly-costed fetches evenly
-        spread = fetch.repartition(nparts, "url")
-        if self.fetch_udf == "arrow":
-            staged_pages = spread.mapInArrow(
-                make_fetch_render_arrow(self.cfg, part_acc), PAGE_SCHEMA
-            )
-        else:
-            staged_pages = spread.mapInPandas(
-                make_fetch_render(self.cfg, part_acc), PAGE_SCHEMA
-            )
-        pages = (
-            staged_pages.withColumn("part_id", F.spark_partition_id())
-            .observe(obs_pages, F.count(F.lit(1)).alias("n_fetched"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        images = pages.select(
-            F.col("url").alias("image_id"), "bytes", "w", "h", "fmt", "caption", "phash"
-        )
-        self.wh.overwrite_partition("images", w, images)  # job 1 (materializes)
-        tick('job_images_udf')
-        n_fetched = int(obs_pages.get["n_fetched"])
-        tick('obs_fetched')
-        if n_fetched == 0:  # budget can never defer ALL rows; 0 = done
-            flagged.unpersist()
-            pages.unpersist()
-            while self._wave_cache:
-                self._wave_cache.pop().unpersist()
-            return None
-        # per-partition lineage counts ride the fetch stage's accumulator
-        # (no extra job); exactness is verified against the observation
-        # and any mismatch (task retry double-count) falls back to the
-        # exact groupBy job
-        part_counts = {str(k): int(v) for k, v in part_acc.value.items()}
-        if sum(part_counts.values()) != n_fetched:
-            part_counts = {  # fallback job: per-partition lineage from cache
-                str(r["part_id"]): r["count"]
-                for r in pages.groupBy("part_id").count().collect()
-            }
-        try:  # deregister: the driver-global registry never evicts, and a
-            # long crawl makes one accumulator per wave
-            from pyspark.accumulators import _accumulatorRegistry
-
-            _accumulatorRegistry.pop(part_acc.aid, None)
-        except Exception:
-            pass
-        tick('job_partcounts')
-
-        # ---- link extraction -> edges (A4) + discovery candidates.
-        # canonicalization runs ONCE: resolved (no image bytes) is the
-        # cached frame both edges and candidates derive from.  It reads
-        # the PAGES cache, not the fetch_log file: the cache is columnar,
-        # so projecting (url, depth, seq, links) never deserializes the
-        # image-bytes column, and the per-wave disk round trip goes away.
-        staged = pages
-        resolved = (
-            staged.select(
-                "url",
-                "depth",
-                "seq",
-                F.posexplode(F.split(F.col("links"), linkfns.SEP)).alias("pos", "href"),
-            )
-            .filter(F.col("href") != "")
-            .withColumn("dst", canon_udf(F.col("url"), F.col("href")))
-            .filter(F.col("dst").rlike("^https?://"))
-            .select("url", "depth", "seq", "pos", "dst")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        obs_edges = Observation()
-        edges = resolved.select(F.col("url").alias("src"), "dst").observe(
-            obs_edges, F.count(F.lit(1)).alias("n_links")
-        )
-        # jobs 2+4 both depend only on the pages cache (materialized by
-        # job 1) and write different tables: run them concurrently so the
-        # smaller write hides inside the larger (guide §2.6).  fetch_log
-        # carries the packed links for downstream/export consumers.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_log = _pool.submit(
-                self.wh.overwrite_partition,
-                "fetch_log",
-                w,
-                pages.select("url", "host", "depth", "seq", "part_id", "links"),
-            )
-            _f_edges = _pool.submit(
-                self.wh.overwrite_partition, "edges", w, edges
-            )
-            _f_log.result()
-            _f_edges.result()  # job 4 (materializes resolved)
-        pages.unpersist()  # resolved is materialized; bytes leave memory
-        tick('job_edges')
-
-        # child seq = parent lineage + one hex digit (crawl_semantics rule
-        # 1: string lineage never overflows, unlike seq*16+pos on int64)
-        cand = first_wins(
-            resolved.select(
-                F.col("dst").alias("url"),
-                F.regexp_extract("dst", HOST_RE, 1).alias("host"),
-                (F.col("depth") + 1).cast("int").alias("depth"),
-                F.concat(
-                    F.col("seq"), F.lower(F.conv(F.col("pos"), 10, 16))
-                ).alias("seq"),
-            )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        n_links = int(obs_edges.get["n_links"])  # job 4 already ran; free
-        seen = self._seen_mirror_df(w) if self.seen_bucketed else self._read_seen(w)
-        seen_add, _ = self._admit(cand, seen, version=w, cand_hint=n_links)
-        tick('admit_plan')
-        obs_seen = Observation()
-        seen_add = seen_add.observe(
-            obs_seen,
-            F.count(F.lit(1)).alias("n_new"),
-            F.sum(F.col("blocked").cast("int")).alias("n_blocked"),
-        )
-        # rebalance before the partitioned write: without it every write
-        # task emits one tiny file per shard it holds (tasks x shards
-        # fragments per wave — 2,865 seen files by wave 6 at bench tier,
-        # measured); AQE sizes the rebalanced partitions, so files track
-        # data volume at any scale (guide §6 small-files).
-        seen_out = (
-            seen_add.hint("rebalance", "shard")
-            if self.seen_shard_partition
-            else seen_add.hint("rebalance")
-        )
-        self.wh.overwrite_partition(  # job 5
-            "seen", w + 1, seen_out, partition_by=self._seen_pby
-        )
+        pages = resolved = cand = part_acc = None
         try:
-            n_new = int(obs_seen.get["n_new"])
-            n_blocked = int(obs_seen.get["n_blocked"] or 0)
-        except Exception:
-            # a wave whose additions are empty at RUNTIME can have its
-            # CollectMetrics node folded away by AQE empty-relation
-            # propagation under the rebalance exchange; the written
-            # partition is still authoritative — count it from footers
-            # (0 in practice), with a real count job as the safety net
-            n_new = self._partition_rows("seen", w + 1)
-            n_blocked = (
-                0
-                if n_new == 0
-                else self.wh.read(spark, "seen", wave=w + 1)
-                .filter(F.col("blocked"))
-                .count()
-            )
-        tick('job_seen')
+            fetch = flagged.filter(F.col("_fetch")).select(*FRONTIER_COLS)
+            deferred = flagged.filter(~F.col("_fetch")).select(*FRONTIER_COLS)
+            if remaining_cap is not None and remaining_cap < n_frontier:
+                # crawl_semantics rule 7: global cap — allowance goes to the
+                # smallest (depth, host, seq) rows; rest deferred unchanged.
+                # orderBy+limit plans as TakeOrderedAndProject for small caps
+                # and sort+GlobalLimit above the top-k threshold; the anti-join
+                # recovering the remainder broadcasts the (capped) selection.
+                sel = (
+                    fetch.orderBy("depth", "host", "seq")
+                    .limit(remaining_cap)
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                self._wave_cache.append(sel)
+                deferred = deferred.unionByName(
+                    fetch.join(sel.select("url"), "url", "left_anti")
+                )
+                fetch = sel
 
-        # frontier additions come FROM the written seen partition — the
-        # admit chain (bloom prefilter + anti-join) runs exactly once.
-        # A zero-addition wave writes a file-less partition dir (nothing
-        # to infer a schema from), so substitute an explicit-schema empty
-        # frame — downstream consumers are all by-name.
-        added = (
-            self.wh.read(spark, "seen", wave=w + 1)
-            if n_new > 0
-            else spark.createDataFrame([], SEEN_READ_SCHEMA)
-        )
-        frontier_add = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
-        obs_next = Observation()
-        nxt = deferred.unionByName(frontier_add).observe(
-            obs_next, F.count(F.lit(1)).alias("n")
-        )
-        # rebalance: the union otherwise writes one file per upstream
-        # cached partition (~50 tiny files/wave)
-        self.wh.overwrite_partition("frontier", w + 1, nxt.hint("rebalance"))  # job 6
-        try:
-            n_frontier_next = int(obs_next.get["n"])
-        except Exception:  # runtime-empty AQE fold, as for obs_seen above
-            n_frontier_next = self._partition_rows("frontier", w + 1)
-        tick('job_frontier')
-        self._update_bloom(  # job 7 (driver fold, or collect/table write)
-            added, w + 1, wave_dir=self.wh.part_dir("seen", w + 1), n_rows=n_new
-        )
-        tick('job_bloom')
-
-        compacted_at = None
-        if self.seen_compact_every and (w + 1) % self.seen_compact_every == 0:
-            # fold waves 0..w+1 (newest snapshot + deltas) into one
-            # shard-partitioned snapshot; amortized one extra seen
-            # read+write per seen_compact_every waves
-            compact_df = self._read_seen(w + 1)
-            compact_df = (
-                compact_df.hint("rebalance", "shard")
-                if self.seen_shard_partition
-                else compact_df.hint("rebalance")
+            # ---- fetch + render (Arrow UDF stage); upper-bound the fetch set
+            # by frontier size (and the cap, when binding) to pick the task
+            # count without a count job
+            fetch_ub = (
+                n_frontier if remaining_cap is None else min(n_frontier, remaining_cap)
             )
-            self.wh.overwrite_partition(
-                "seen_compact",
-                w + 1,
-                compact_df,
-                partition_by=self._seen_pby,
+            nparts = max(
+                1,
+                min(self.n_partitions, math.ceil(fetch_ub / self.rows_per_fetch_task)),
             )
-            compacted_at = w + 1
-        tick('job_compact')
+            obs_pages = Observation()
+            part_acc = spark.sparkContext.accumulator({}, _PART_COUNT_ACC)
+            # hash- rather than round-robin-repartition: keyless repartition
+            # first pays a local sort of its input for retry determinism
+            # (SPARK-23207); hashing by url is deterministic without it and
+            # spreads uniformly-costed fetches evenly
+            pages = (
+                fetch.repartition(nparts, "url")
+                .mapInArrow(make_fetch_render_arrow(self.cfg, part_acc), PAGE_SCHEMA)
+                .withColumn("part_id", F.spark_partition_id())
+                .observe(obs_pages, F.count(F.lit(1)).alias("n_fetched"))
+            ).persist(StorageLevel.MEMORY_AND_DISK)
 
-        n_deferred = n_frontier - n_fetched
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        stats = {
-            "wave": w,
-            "n_frontier": n_frontier,
-            "n_fetched": n_fetched,
-            "n_deferred": n_deferred,
-            "n_links": n_links,
-            "n_new": n_new,
-            "n_robots_blocked": n_blocked,
-            "n_frontier_next": n_frontier_next,
-            "n_total_fetched": total_before + n_fetched,
-            "n_seen_shards_scanned": self._n_seen_shards_scanned,
-            "seen_compacted_at": compacted_at,
-            "wall_ms": wall_ms,
-            "partitions": part_counts,
-        }
-        stats = {k: v for k, v in stats.items() if v is not None}
-        metrics_pdf = pd.DataFrame(
-            [{k: v for k, v in stats.items() if k != "partitions"}]
-        )
-        # one metrics row: driver-side parquet write (no Spark job)
-        self.wh.overwrite_partition_local("wave_metrics", w, metrics_pdf)
-        self.wh.commit(w + 1, {"kind": "wave", **stats})
-        tick('job_metrics_commit')
-        if self.seen_bucketed:
-            # fold the committed wave's additions into the mirror (append
-            # = one bucket-local file per bucket, no shuffle of the
-            # existing mirror); on the rewrite cadence, rebuild the whole
-            # mirror instead so files per bucket stay bounded.  The
-            # cadence follows seen_compact_every but has its own default
-            # when compaction is off — otherwise an append-only mirror
-            # grows one file per bucket per wave without bound (ADVICE
-            # r5).  A crash between commit and this write leaves the
-            # marker at w, and the next wave's sync rebuilds — never a
-            # wrong join.
-            mirror_cadence = self.seen_compact_every or 8
-            if compacted_at is not None or (w + 1) % mirror_cadence == 0:
-                self._mirror_write(self._read_seen(w + 1), "overwrite", w + 1)
+            images = pages.select(
+                F.col("url").alias("image_id"),
+                "bytes", "w", "h", "fmt", "caption", "phash",
+            )
+            self.wh.overwrite_partition("images", w, images)  # job 1 (materializes)
+            tick('job_images_udf')
+            n_fetched = int(obs_pages.get["n_fetched"])
+            tick('obs_fetched')
+            if n_fetched == 0:  # budget can never defer ALL rows; 0 = done
+                return None
+            # per-partition lineage counts ride the fetch stage's accumulator
+            # (no extra job); exactness is verified against the observation
+            # and any mismatch (task retry double-count) falls back to the
+            # exact groupBy job
+            part_counts = {str(k): int(v) for k, v in part_acc.value.items()}
+            if sum(part_counts.values()) != n_fetched:
+                part_counts = {  # fallback job: per-partition lineage from cache
+                    str(r["part_id"]): r["count"]
+                    for r in pages.groupBy("part_id").count().collect()
+                }
+            tick('job_partcounts')
+
+            # ---- link extraction -> edges (A4) + discovery candidates.
+            # canonicalization runs ONCE: resolved (no image bytes) is the
+            # cached frame both edges and candidates derive from.  It reads
+            # the PAGES cache, not the fetch_log file: the cache is columnar,
+            # so projecting (url, depth, seq, links) never deserializes the
+            # image-bytes column, and the per-wave disk round trip goes away.
+            resolved = (
+                pages.select(
+                    "url",
+                    "depth",
+                    "seq",
+                    F.posexplode(F.split(F.col("links"), linkfns.SEP)).alias(
+                        "pos", "href"
+                    ),
+                )
+                .filter(F.col("href") != "")
+                .withColumn("dst", canon_udf(F.col("url"), F.col("href")))
+                .filter(F.col("dst").rlike("^https?://"))
+                .select("url", "depth", "seq", "pos", "dst")
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            obs_edges = Observation()
+            edges = resolved.select(F.col("url").alias("src"), "dst").observe(
+                obs_edges, F.count(F.lit(1)).alias("n_links")
+            )
+            # jobs 2+4 both depend only on the pages cache (materialized by
+            # job 1) and write different tables: run them concurrently so the
+            # smaller write hides inside the larger (guide §2.6).  fetch_log
+            # carries the packed links for downstream/export consumers.
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as _pool:
+                _f_log = _pool.submit(
+                    self.wh.overwrite_partition,
+                    "fetch_log",
+                    w,
+                    pages.select("url", "host", "depth", "seq", "part_id", "links"),
+                )
+                _f_edges = _pool.submit(
+                    self.wh.overwrite_partition, "edges", w, edges
+                )
+                _f_log.result()
+                _f_edges.result()  # job 4 (materializes resolved)
+            pages.unpersist()  # resolved is materialized; bytes leave memory
+            tick('job_edges')
+
+            # child seq = parent lineage + one hex digit (crawl_semantics rule
+            # 1: string lineage never overflows, unlike seq*16+pos on int64)
+            cand = first_wins(
+                resolved.select(
+                    F.col("dst").alias("url"),
+                    F.regexp_extract("dst", HOST_RE, 1).alias("host"),
+                    (F.col("depth") + 1).cast("int").alias("depth"),
+                    F.concat(
+                        F.col("seq"), F.lower(F.conv(F.col("pos"), 10, 16))
+                    ).alias("seq"),
+                )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+
+            n_links = int(obs_edges.get["n_links"])  # job 4 already ran; free
+            seen_add, _ = self._admit(cand, self._read_seen(w), cand_hint=n_links)
+            tick('admit_plan')
+            obs_seen = Observation()
+            seen_add = seen_add.observe(
+                obs_seen,
+                F.count(F.lit(1)).alias("n_new"),
+                F.sum(F.col("blocked").cast("int")).alias("n_blocked"),
+            )
+            # rebalance before the partitioned write: without it every write
+            # task emits one tiny file per shard it holds (tasks x shards
+            # fragments per wave — 2,865 seen files by wave 6 at bench tier,
+            # measured); AQE sizes the rebalanced partitions, so files track
+            # data volume at any scale (guide §6 small-files).
+            self.wh.overwrite_partition(  # job 5
+                "seen", w + 1, seen_add.hint("rebalance", "shard"),
+                partition_by=SEEN_PARTITION_BY,
+            )
+            got = _observed(obs_seen)
+            if got is not None:
+                n_new = int(got["n_new"])
+                n_blocked = int(got["n_blocked"] or 0)
             else:
-                self._mirror_write(added, "append", w + 1)
-        if self.snapshot_keep:
-            self.wh.expire_snapshots(self.snapshot_keep)
+                # the written partition is authoritative — count it from
+                # footers (0 in practice), with a real count job as the
+                # safety net
+                n_new = self._partition_rows("seen", w + 1)
+                n_blocked = (
+                    0
+                    if n_new == 0
+                    else self.wh.read(spark, "seen", wave=w + 1)
+                    .filter(F.col("blocked"))
+                    .count()
+                )
+            tick('job_seen')
 
-        flagged.unpersist()
-        resolved.unpersist()
-        cand.unpersist()
-        while self._wave_cache:
-            self._wave_cache.pop().unpersist()
-        tick("cleanup_mirror")
+            # frontier additions come FROM the written seen partition — the
+            # admit chain (bloom prefilter + anti-join) runs exactly once.
+            # A zero-addition wave writes a file-less partition dir (nothing
+            # to infer a schema from), so substitute an explicit-schema empty
+            # frame — downstream consumers are all by-name.
+            added = (
+                self.wh.read(spark, "seen", wave=w + 1)
+                if n_new > 0
+                else spark.createDataFrame([], SEEN_READ_SCHEMA)
+            )
+            frontier_add = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
+            obs_next = Observation()
+            nxt = deferred.unionByName(frontier_add).observe(
+                obs_next, F.count(F.lit(1)).alias("n")
+            )
+            # rebalance: the union otherwise writes one file per upstream
+            # cached partition (~50 tiny files/wave)
+            self.wh.overwrite_partition("frontier", w + 1, nxt.hint("rebalance"))  # job 6
+            got = _observed(obs_next)
+            n_frontier_next = (
+                int(got["n"]) if got is not None
+                else self._partition_rows("frontier", w + 1)
+            )
+            tick('job_frontier')
+            self._update_bloom(  # job 7 (driver fold, or distributed build)
+                added, wave_dir=self.wh.part_dir("seen", w + 1), n_rows=n_new
+            )
+            tick('job_bloom')
+
+            compacted_at = None
+            if self.seen_compact_every and (w + 1) % self.seen_compact_every == 0:
+                # fold waves 0..w+1 (newest snapshot + deltas) into one
+                # shard-partitioned snapshot; amortized one extra seen
+                # read+write per seen_compact_every waves
+                self.wh.overwrite_partition(
+                    "seen_compact",
+                    w + 1,
+                    self._read_seen(w + 1).hint("rebalance", "shard"),
+                    partition_by=SEEN_PARTITION_BY,
+                )
+                compacted_at = w + 1
+            tick('job_compact')
+
+            n_deferred = n_frontier - n_fetched
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            stats = {
+                "wave": w,
+                "n_frontier": n_frontier,
+                "n_fetched": n_fetched,
+                "n_deferred": n_deferred,
+                "n_links": n_links,
+                "n_new": n_new,
+                "n_robots_blocked": n_blocked,
+                "n_frontier_next": n_frontier_next,
+                "n_total_fetched": total_before + n_fetched,
+                "n_seen_shards_scanned": self._n_seen_shards_scanned,
+                "seen_compacted_at": compacted_at,
+                "wall_ms": wall_ms,
+                "partitions": part_counts,
+            }
+            stats = {k: v for k, v in stats.items() if v is not None}
+            metrics_pdf = pd.DataFrame(
+                [{k: v for k, v in stats.items() if k != "partitions"}]
+            )
+            # one metrics row: driver-side parquet write (no Spark job)
+            self.wh.overwrite_partition_local("wave_metrics", w, metrics_pdf)
+            self.wh.commit(w + 1, {"kind": "wave", **stats})
+            tick('job_metrics_commit')
+            if self.snapshot_keep:
+                self.wh.expire_snapshots(self.snapshot_keep)
+        finally:
+            # every exit path (commit, early return, error) releases the
+            # wave's caches; the accumulator is deregistered last — the
+            # driver-global registry never evicts, and popping it before
+            # pages is gone would let a recomputed partition send a late
+            # update to an unknown id
+            for df in (flagged, pages, resolved, cand, *self._wave_cache):
+                if df is not None:
+                    df.unpersist()
+            self._wave_cache.clear()
+            if part_acc is not None:
+                _accumulatorRegistry.pop(part_acc.aid, None)
+        tick("cleanup")
         if self.profile:
             self.phase_times.append(_prof)
         return stats
@@ -1090,7 +867,5 @@ class CrawlEngine:
         v = eng.wh.last_version()
         if v is None:
             raise RuntimeError("nothing to resume: no committed manifest")
-        if eng.bloom_mode == "broadcast":
-            eng._update_bloom(eng._read_seen(v), v)
-        # copartition mode: the bloom table is already on disk at wave=v
+        eng._update_bloom(eng._read_seen(v))
         return eng.run_waves(v, max_waves)

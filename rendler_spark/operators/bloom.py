@@ -17,13 +17,9 @@ SURVEY.md §0.4), so bits live in numpy arrays:
   grouped-map task per shard, emitting ``(shard, bits binary)``; the driver
   ORs per-wave increments into its running shard dict (bits-sized, never
   row-sized).
-* probe (broadcast mode): shard dict broadcast; a scalar pandas UDF tests
-  candidate hashes vectorized per shard present in the batch.
-* probe (co-partitioned mode, the 10^10-scale path where the union of
-  shards exceeds broadcast size): candidates and the bloom-bits table are
-  cogrouped on ``shard`` so each task holds exactly one shard's bits —
-  shuffle is by hash prefix, per BASELINE.json:L6 "broadcast or
-  shuffle-hash join by hash prefix".
+* probe: shard dict broadcast (the "broadcast" arm of BASELINE.json:L6
+  "broadcast or shuffle-hash join by hash prefix"); a scalar pandas UDF
+  tests candidate hashes vectorized per shard present in the batch.
 
 Membership hashing is double hashing over the 64-bit xxhash64 of the
 canonical URL: position_i = (h1 + i*h2) mod m (Kirsch–Mitzenmacher).

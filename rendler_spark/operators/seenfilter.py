@@ -3,8 +3,7 @@
 The north rule names "a partitioned Bloom/cuckoo-filter URL-seen set"
 (BASELINE.json:L6); the engine treats the filter as an opaque per-shard
 byte blob with three operations — build, merge, contains — so either kind
-plugs into both distribution modes (driver-broadcast or the cogrouped
-shard-table path).  All functions are module-level (picklable into Spark
+plugs into the same driver-merged, broadcast prefilter.  All functions are module-level (picklable into Spark
 UDF closures) and take the kind + params explicitly.
 
 Contract shared by both kinds: ``contains`` has ZERO false negatives;

@@ -1107,7 +1107,7 @@ def q_tumbling_window(spark, sf):
     """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions FROM (
          SELECT user_id,
                 CASE WHEN prev IS NULL
-                       OR date_diff('second', prev, ts) > 600 THEN 1
+                       OR ts > prev + INTERVAL 600 SECOND THEN 1
                      ELSE 0 END AS new_session
          FROM (SELECT user_id, ts,
                       lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1116,11 +1116,11 @@ def q_tumbling_window(spark, sf):
        GROUP BY user_id""",
 )
 def q_session_gap(spark, sf):
-    """I3: sessionization (gaps-and-islands; 10-minute gap)."""
+    """I3: sessionization (gaps-and-islands; a gap of more than 10 minutes,
+    compared as an exact interval on both engines, starts a session)."""
     e = t(spark, sf, "events").withColumn("prev", F.lag("ts").over(_w_user()))
     new_s = F.when(
-        F.col("prev").isNull()
-        | (F.expr("timestampdiff(SECOND, prev, ts)") > 600),
+        F.col("prev").isNull() | F.expr("ts > prev + INTERVAL 600 SECONDS"),
         1,
     ).otherwise(0)
     return (

@@ -162,7 +162,7 @@ class Warehouse:
     def truncate(self, version: int) -> None:
         """Roll the warehouse back to state ``version``: drop manifests and
         partition dirs belonging to later waves.  State tables (frontier/
-        seen/bloom) keep wave <= version (their wave=N dir belongs to
+        seen/seen_compact) keep wave <= version (their wave=N dir belongs to
         commit N); output tables keep wave < version (wave w's outputs are
         committed by version w+1).  Used by the scaling bench to re-run the
         same continuation repeatedly, and usable for manual rollback."""
@@ -195,7 +195,7 @@ class Warehouse:
     #: tables whose wave=N dir belongs to commit N (everything else's
     #: wave=N outputs are committed by version N+1) — shared by truncate()
     #: and read_as_of()
-    STATE_TABLES = frozenset({"frontier", "seen", "seen_compact", "bloom"})
+    STATE_TABLES = frozenset({"frontier", "seen", "seen_compact"})
 
     def read_as_of(
         self, spark: SparkSession, table: str, version: int

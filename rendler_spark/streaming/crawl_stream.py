@@ -13,7 +13,9 @@ storage, schema, and resume semantics.
 Pipeline:  readStream(url)
            -> url_hash/shard columns (JVM)
            -> streaming_seen_dedup (applyInPandasWithState, exact mode)
-           -> foreachBatch: mapInPandas fetch+render kernel
+           -> foreachBatch: mapInArrow fetch+render kernel (the wave
+              loop's own wrapper; inside foreachBatch the batch is a
+              static frame)
               -> append images (input_hint schema) + edges, commit manifest
 
 Input URLs are assumed canonical (the synthetic web emits canonical
@@ -42,7 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 from rendler_spark import synthweb
 from rendler_spark.crawl_semantics import N_SHARDS
-from rendler_spark.engine import PAGE_SCHEMA, make_fetch_render
+from rendler_spark.engine import PAGE_SCHEMA, make_fetch_render_arrow
 from rendler_spark.functions.links import SEP as LINK_SEP
 from rendler_spark.sources.tables import Warehouse
 from rendler_spark.streaming.stateful import streaming_seen_dedup
@@ -72,7 +74,7 @@ def _ingest_batch(
                 F.lit(0).alias("depth"),
                 F.lit("").alias("seq"),
             )
-            .mapInPandas(make_fetch_render(cfg), PAGE_SCHEMA)
+            .mapInArrow(make_fetch_render_arrow(cfg), PAGE_SCHEMA)
             .observe(obs, F.count(F.lit(1)).alias("n_fetched"))
             .persist()
         )

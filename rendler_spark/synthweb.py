@@ -241,6 +241,15 @@ def render_coeffs(cfg: WebConfig, hi, pj) -> np.ndarray:
     )
 
 
+def canvas_int32_safe(W: int, H: int) -> bool:
+    """True when render_pixels' base-pass math on a W x H canvas cannot
+    leave int32: the largest value any term reaches — x*y, and
+    a*x + b*y + ((x*y) >> 4)*d + s + 2*cc with every coefficient < 251 —
+    is below 2^31."""
+    xm, ym, c = W - 1, H - 1, 250
+    return max(xm * ym, c * xm + c * ym + ((xm * ym) >> 4) * c + 3 * c) < 2**31
+
+
 def render_pixels(
     cfg: WebConfig, hi: int, pj: int, *, _wh=None, _coeffs=None
 ) -> np.ndarray:
@@ -268,13 +277,15 @@ def render_pixels(
     )
     a, b, cc, d, s = (int(x % np.uint64(251)) for x in c)
     S = max(1, int(cfg.supersample))
-    # int32 is exact here (all terms < 2^31 for any supported size), and
-    # assembling the (h, w) base before broadcasting the 3-channel term
+    # int32 is exact while every term stays below 2^31 (canvas_int32_safe);
+    # larger canvases take int64, which computes the same exact values.
+    # Assembling the (h, w) base before broadcasting the 3-channel term
     # halves the number of full-size passes; integer math is associative,
     # so the pixels are bit-identical to the one-expression form
-    x = np.arange(w * S, dtype=np.int32)[None, :, None]
-    y = np.arange(h * S, dtype=np.int32)[:, None, None]
-    ch = np.arange(3, dtype=np.int32)[None, None, :]
+    dt = np.int32 if canvas_int32_safe(w * S, h * S) else np.int64
+    x = np.arange(w * S, dtype=dt)[None, :, None]
+    y = np.arange(h * S, dtype=dt)[:, None, None]
+    ch = np.arange(3, dtype=dt)[None, None, :]
     base = a * x + b * y + ((x * y) >> 4) * d + s
     px = (base + cc * ch) & 255
     if S > 1:

@@ -242,3 +242,48 @@ def test_freq_items_superset_guarantee(spark):
         }
         assert exact <= got, (col, exact, got)
     assert got_types and got_buckets
+
+
+def test_session_gap_compares_exact_interval(spark, tmp_path):
+    """q_session_gap and its DuckDB twin start a session on a gap of MORE
+    than 600 s, compared exactly: 599.9 and 600.0 s continue a session,
+    600.4 s (straddling a second boundary) and 600.83 s start one.
+    Spark, DuckDB and a plain-Python reference must agree."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1)
+    gaps = [599.9, 600.0, 600.4, 600.83]
+    starts = {1: 0.5, 2: 0.25, 3: 0.9, 4: 0.1}  # user k has the one gap gaps[k-1]
+    ts = {u: [s, s + gaps[u - 1]] for u, s in starts.items()}
+    ts[5] = [0.3]  # user 5 chains every gap
+    for g in gaps:
+        ts[5].append(ts[5][-1] + g)
+    rows = [(u, t0 + dt.timedelta(seconds=round(s, 6))) for u in ts for s in ts[u]]
+    events = pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+        "user_id": pa.array([r[0] for r in rows], pa.int64()),
+        "event_type": pa.array(["view"] * len(rows)),
+        "value": pa.array([1.0] * len(rows)),
+        "props": pa.array(["{}"] * len(rows)),
+    })
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+
+    want = {}
+    for u, _ in rows:
+        stamps = sorted(r[1] for r in rows if r[0] == u)
+        want[u] = 1 + sum(
+            b - a > dt.timedelta(seconds=600) for a, b in zip(stamps, stamps[1:])
+        )
+    assert want == {1: 1, 2: 1, 3: 2, 4: 2, 5: 3}
+    got = {
+        r["user_id"]: r["n_sessions"]
+        for r in QUERIES["q_session_gap"](spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    twin = dict(con.sql(ORACLE["q_session_gap"]).fetchall())
+    assert got == twin == want

@@ -6,8 +6,11 @@ tables — content-identical row sets including image bytes.
 
 import shutil
 
+import pytest
+
 from rendler_spark import synthweb
 from rendler_spark.engine import CrawlEngine
+from rendler_spark.sources.tables import Warehouse
 
 CFG = synthweb.WebConfig()
 WAVES = 3
@@ -20,10 +23,15 @@ def _table_rows(spark, eng, table, cols):
     )
 
 
-def test_kill_and_resume_bit_identical(spark, tmp_path):
-    full = CrawlEngine(spark, CFG, str(tmp_path / "full"))
-    full.run(WAVES)
+@pytest.fixture(scope="module")
+def full(spark, tmp_path_factory):
+    """The uninterrupted reference crawl every resume is compared with."""
+    eng = CrawlEngine(spark, CFG, str(tmp_path_factory.mktemp("full") / "wh"))
+    eng.run(WAVES)
+    return eng
 
+
+def test_kill_and_resume_bit_identical(spark, tmp_path, full):
     part = CrawlEngine(spark, CFG, str(tmp_path / "part"))
     part.run(2)  # "crash" after wave-1 commit
     # simulate an uncommitted partial write of the next wave: garbage in
@@ -51,13 +59,10 @@ def test_kill_and_resume_bit_identical(spark, tmp_path):
     shutil.rmtree(tmp_path, ignore_errors=True)
 
 
-def test_snapshot_keep_bounds_manifests_and_stays_identical(spark, tmp_path):
+def test_snapshot_keep_bounds_manifests_and_stays_identical(spark, tmp_path, full):
     """snapshot_keep expires old manifests after each wave commit; the
     crawl's outputs are unchanged vs the default engine and resume from
     the latest (retained) manifest still works."""
-    ref = CrawlEngine(spark, CFG, str(tmp_path / "ref"))
-    ref.run(WAVES)
-
     kept = CrawlEngine(spark, CFG, str(tmp_path / "kept"), snapshot_keep=2)
     kept.run(2)
     assert kept.wh.first_version() == kept.wh.last_version() - 1  # expired
@@ -70,7 +75,51 @@ def test_snapshot_keep_bounds_manifests_and_stays_identical(spark, tmp_path):
         "edges": ("src", "dst", "wave"),
         "images": ("image_id", "bytes", "caption", "phash"),
     }.items():
-        assert _table_rows(spark, ref, table, cols) == _table_rows(
+        assert _table_rows(spark, full, table, cols) == _table_rows(
             spark, resumed, table, cols
         ), table
     shutil.rmtree(tmp_path, ignore_errors=True)
+
+
+def test_failed_wave_releases_caches_and_resumes_exactly(spark, tmp_path, full, monkeypatch):
+    """A wave that fails mid-way (here: its seen write) leaves no cached
+    frame and no registered accumulator behind, and resuming from the
+    last commit gives the uninterrupted crawl's tables."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    def persisted():  # other tests' leftovers may be there already
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    real = Warehouse.overwrite_partition
+
+    def failing(self, table, wave, *a, **kw):
+        if table == "seen" and wave == 2:  # wave 1's seen additions
+            raise OSError("injected seen-write failure")
+        return real(self, table, wave, *a, **kw)
+
+    wh = str(tmp_path / "crash")
+    eng = CrawlEngine(spark, CFG, wh)
+    eng.init()
+    eng.run_wave(0)
+    n_acc = len(_accumulatorRegistry)
+    monkeypatch.setattr(Warehouse, "overwrite_partition", failing)
+    with pytest.raises(OSError, match="injected"):
+        eng.run_wave(1)
+    monkeypatch.undo()
+    assert persisted() <= before
+    assert len(_accumulatorRegistry) == n_acc
+    assert eng.wh.last_version() == 1
+
+    stats = CrawlEngine.resume(spark, CFG, wh, WAVES)
+    assert [s["wave"] for s in stats] == [1, 2]
+    resumed = CrawlEngine(spark, CFG, wh)
+    for table, cols in {
+        "seen": ("url", "depth", "seq", "blocked"),
+        "frontier": ("url", "host", "depth", "seq"),
+        "edges": ("src", "dst", "wave"),
+        "images": ("image_id", "bytes", "w", "h", "fmt", "caption", "phash"),
+    }.items():
+        assert _table_rows(spark, full, table, cols) == _table_rows(
+            spark, resumed, table, cols
+        ), table

@@ -110,17 +110,18 @@ def test_crawl_ingest_stream_foreachbatch(spark, tmp_path, mode, kind):
     """Streaming ingestion skin: 2 overlapping URL micro-batches ->
     stateful dedup -> fetch/render foreachBatch -> warehouse.  Each
     distinct URL is rendered exactly once, bytes/captions are identical
-    to the batch kernel's output for the same URLs, every non-empty
+    to the per-URL reference render for the same URLs, every non-empty
     epoch committed a manifest, and the wave/commit offset follows the
     warehouse convention (outputs at wave=N covered by manifest N+1, so
     read_as_of sees exactly the committed batches).  Parametrized over
     both dedup state shapes (exact sets / bounded blob)."""
     import pandas as pd
 
-    from rendler_spark.engine import make_fetch_render, PAGE_SCHEMA
     from rendler_spark.sources.tables import Warehouse
     from rendler_spark.streaming.crawl_stream import crawl_ingest_stream
-    from rendler_spark.synthweb import WebConfig, page_url
+    from rendler_spark.synthweb import (
+        WebConfig, page_caption, page_url, parse_url, render_encoded,
+    )
 
     cfg = WebConfig()
     urls1 = page_url(cfg, pd.Series([0, 0, 1, 1]), pd.Series([0, 1, 0, 1])).tolist()
@@ -144,14 +145,13 @@ def test_crawl_ingest_stream_foreachbatch(spark, tmp_path, mode, kind):
     images = wh.read(spark, "images").collect()
     want_urls = sorted(set(urls1) | set(urls2))
     assert sorted(r["image_id"] for r in images) == want_urls
-    # byte/caption parity with the batch kernel on the same URLs
-    ref = {
-        r["url"]: (bytes(r["bytes"]), r["caption"], r["phash"])
-        for r in spark.createDataFrame(pd.DataFrame({"url": want_urls}))
-        .selectExpr("url", "'h' AS host", "0 AS depth", "'' AS seq")
-        .mapInPandas(make_fetch_render(cfg), PAGE_SCHEMA)
-        .collect()
-    }
+    # byte/caption parity with the per-URL reference render the oracle uses
+    hi, pj, _ = parse_url(pd.Series(want_urls))
+    captions = page_caption(cfg, hi, pj)
+    ref = {}
+    for k, u in enumerate(want_urls):
+        b, _, _, _, ph = render_encoded(cfg, int(hi[k]), int(pj[k]))
+        ref[u] = (b, captions.iloc[k], ph)
     for r in images:
         assert (bytes(r["bytes"]), r["caption"], r["phash"]) == ref[r["image_id"]]
     manifests = wh.all_manifests()

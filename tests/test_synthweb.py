@@ -61,3 +61,34 @@ def test_effective_budget():
 def test_caption_shape():
     cap = synthweb.page_caption(CFG, [1], [2]).iloc[0]
     assert len(cap.split(" ")) == 8
+
+
+def _corner_value(W, H, dt):
+    """render_pixels' base-pass value at the canvas' far corner with every
+    coefficient at its maximum (250), evaluated in dtype ``dt``."""
+    x, y, c = np.array([W - 1], dtype=dt), np.array([H - 1], dtype=dt), 250
+    return int((c * x + c * y + ((x * y) >> 4) * c + c + c * 2)[0])
+
+
+def test_render_int32_bound_at_largest_supersample():
+    """Default sides span [img_min, img_min + img_span - 1] = [32, 128];
+    supersample 91 is the largest that keeps the render math in int32.
+    There the int32 corner value is exact; one step up it would wrap, and
+    canvas_int32_safe sends that canvas to int64."""
+    side = CFG.img_min + CFG.img_span - 1
+    S = 91
+    W = side * S
+    assert synthweb.canvas_int32_safe(W, W)
+    assert _corner_value(W, W, np.int32) == _corner_value(W, W, np.int64)
+    W1 = side * (S + 1)
+    assert not synthweb.canvas_int32_safe(W1, W1)
+    assert _corner_value(W1, W1, np.int32) != _corner_value(W1, W1, np.int64)
+
+
+def test_render_int64_fallback_is_bit_identical(monkeypatch):
+    cfgs = [CFG, synthweb.WebConfig(supersample=3, render_iters=2)]
+    pages = [(0, 0), (3, 7), (5, 11)]
+    want = [synthweb.render_pixels(c, hi, pj) for c in cfgs for hi, pj in pages]
+    monkeypatch.setattr(synthweb, "canvas_int32_safe", lambda W, H: False)
+    got = [synthweb.render_pixels(c, hi, pj) for c in cfgs for hi, pj in pages]
+    assert all(np.array_equal(a, b) for a, b in zip(got, want))

@@ -14,8 +14,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import pyspark.sql.functions as F  # noqa: E402
-
 SF = "/root/testdata/sf0.01"
 
 
@@ -77,60 +75,12 @@ def main() -> None:
         fmt(QUERIES["q_tpch_q3_shape"](spark, SF)),
     ))
 
-    # 5. The engine's wave anti-join, both layouts
-    import shutil
-    import tempfile
-
-    from rendler_spark.engine import CrawlEngine
-    from rendler_spark.synthweb import WebConfig
-
-    wh = tempfile.mkdtemp(prefix="plans_wh_")
-    try:
-        eng = CrawlEngine(spark, WebConfig(), wh, seen_bucketed=True)
-        eng.run(2)
-        cand = (
-            spark.range(2000)
-            .select(
-                F.concat(
-                    F.lit("http://hx.test/p"), F.col("id").cast("string")
-                ).alias("url")
-            )
-            .withColumn("url_hash", F.xxhash64("url"))
-        )
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        ):
-            spark.conf.set(k, "-1")
-        mirror = eng._seen_mirror_df(2)
-        bucketed = cand.join(mirror.select("url"), ["url"], "left_anti")
-        plain = cand.join(
-            eng._read_seen(2).select("url_hash", "url"),
-            ["url_hash", "url"],
-            "left_anti",
-        )
-        sections.append((
-            "wave anti-join — bucketed mirror (seen_bucketed=True)",
-            "ONE Exchange (the candidates); the seen side streams from "
-            "its url-buckets with no shuffle. Broadcast disabled to show "
-            "the at-scale shape.",
-            fmt(bucketed),
-        ))
-        sections.append((
-            "wave anti-join — plain layout (default below the crossover)",
-            "Both sides exchange on the join keys; this is the recurring "
-            "O(seen) shuffle the mirror deletes.",
-            fmt(plain),
-        ))
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-
     out = [
         "# BENCH/PLANS.md — physical-plan dossier (generated)",
         "",
-        "Generated by `python tools/plan_dossier.py` on the sf0.01 tables",
-        "and a t1 crawl warehouse. The test suite PINS these properties",
-        "(tests/test_plans.py, test_bucketed.py, test_engine_bucketed_seen.py,",
+        "Generated by `python tools/plan_dossier.py` on the sf0.01 tables.",
+        "The test suite PINS these properties",
+        "(tests/test_plans.py, test_bucketed.py,",
         "test_registry_lint.py); this file makes the plans readable without",
         "running anything.",
         "",
