@@ -19,6 +19,10 @@ DataFrames (BASELINE.json:L6 "Each crawl wave is a batch iteration"):
       ├─ robots gate → seen additions (blocked flagged) (B3)
       └─ commit wave manifest: images/edges/seen/frontier(w+1)/metrics
 
+Every count in the manifest (fetched, links, new, blocked, next frontier,
+per-partition lineage) is read from the parquet footers of the
+partitions the wave just wrote — one source, no count jobs.
+
 The per-wave commit (Warehouse manifests) replaces the scheduler's
 frameworkMessage folding as the single synchronization point and gives
 exact resume (A6 — absent in the reference, demanded by BASELINE.json:L14).
@@ -59,10 +63,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from py4j.protocol import Py4JJavaError
-from pyspark import AccumulatorParam
-from pyspark.accumulators import _accumulatorRegistry
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from rendler_spark import codecs, synthweb, urlnorm
@@ -134,37 +135,7 @@ def _render_batch(cfg: synthweb.WebConfig, urls: pd.Series) -> dict:
     }
 
 
-class _PartCountAcc(AccumulatorParam):
-    """Dict-merge accumulator: {partition_id: rows} summed across tasks.
-
-    Rides the fetch/render stage so the per-partition lineage counts need
-    no separate Spark job.  Accumulator updates can double-count when a
-    cached partition is recomputed (Spark only guarantees exactly-once
-    inside actions), so the engine verifies sum(counts) == n_fetched and
-    falls back to the exact groupBy job on any mismatch."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = a.get(k, 0) + v
-        return a
-
-
-_PART_COUNT_ACC = _PartCountAcc()
-
-
-def _acc_add_partition_rows(acc, n_rows: int) -> None:
-    if acc is not None:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        if tc is not None:
-            acc.add({tc.partitionId(): n_rows})
-
-
-def make_fetch_render_arrow(cfg: synthweb.WebConfig, acc=None):
+def make_fetch_render_arrow(cfg: synthweb.WebConfig):
     """mapInArrow wrapper (SURVEY §2J): the pass-through columns
     (url/host/depth/seq) are re-emitted as the INPUT RecordBatch's own
     arrays — zero copy, no pandas object-column round trip — and the
@@ -176,7 +147,6 @@ def make_fetch_render_arrow(cfg: synthweb.WebConfig, acc=None):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            _acc_add_partition_rows(acc, rb.num_rows)
             urls = rb.column(rb.schema.get_field_index("url")).to_pandas()
             out = _render_batch(cfg, urls)
             arrays = [
@@ -226,21 +196,6 @@ def first_wins(df: DataFrame) -> DataFrame:
             F.col("m.seq").alias("seq"),
         )
     )
-
-
-def _observed(obs: Observation) -> dict | None:
-    """``obs.get``, or None when the observed plan was empty at runtime
-    and AQE empty-relation propagation folded its CollectMetrics node
-    away.  Spark 4.1.2 then completes the Observation with a schema-less
-    empty Row, which ``PythonSQLUtils.toPyRow`` rejects with a
-    ``java.lang.AssertionError`` (pinned by tests/test_engine_equivalence.py::
-    test_zero_addition_wave_observation_fold); any other error propagates."""
-    try:
-        return obs.get
-    except Py4JJavaError as e:
-        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
-            raise
-        return None
 
 
 # --------------------------------------------------------------- engine
@@ -308,9 +263,7 @@ class CrawlEngine:
         self.robots = robots_df(spark, cfg)
         self._shard_blobs: dict[int, bytes] = {}
         self._bc = None
-        #: opt-in wall-clock phase profiling (bench_extra/tools only):
-        #: when truthy, run_wave appends {phase: seconds} dicts here.
-        self.profile: bool = False
+        #: one {phase: seconds} dict per completed wave
         self.phase_times: list[dict] = []
 
     # ----------------------------------------------------- bloom state
@@ -492,40 +445,14 @@ class CrawlEngine:
         self._update_bloom(
             self.wh.read(self.spark, "seen", wave=0),
             wave_dir=self.wh.part_dir("seen", 0),
-            n_rows=self._partition_rows("seen", 0),
+            n_rows=self.wh.partition_rows("seen", 0),
         )
-        n = self.wh.read(self.spark, "frontier", wave=0).count()
-        self.wh.commit(0, {"kind": "init", "n_seeds": len(canon), "n_frontier": n})
-
-    def _frontier_size(self, version: int) -> int:
-        """Frontier row count at a state version — read from the manifest
-        (written by the committing wave), falling back to a count job."""
-        man = self.wh.manifest(version)
-        key = "n_frontier" if man.get("kind") == "init" else "n_frontier_next"
-        if key in man:
-            return int(man[key])
-        return self.wh.read(self.spark, "frontier", wave=version).count()
-
-    def _total_fetched(self, version: int) -> int:
-        """Cumulative fetch count at a state version (manifest-carried;
-        summed as a fallback for pre-cap warehouses)."""
-        man = self.wh.manifest(version)
-        if "n_total_fetched" in man:
-            return int(man["n_total_fetched"])
-        return sum(
-            int(self.wh.manifest(v).get("n_fetched", 0))
-            for v in range(1, version + 1)
-        )
-
-    def _partition_rows(self, table: str, wave: int) -> int:
-        """Row count of one written wave partition from parquet footers
-        (driver-side, metadata-only — no Spark job)."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in self.wh.part_dir(table, wave).rglob("*.parquet")
-        )
+        self.wh.commit(0, {
+            "kind": "init",
+            "n_seeds": len(canon),
+            "n_frontier": self.wh.partition_rows("frontier", 0),
+            "n_total_fetched": 0,
+        })
 
     def _read_seen(self, upto: int) -> DataFrame:
         """The cumulative seen set at state ``upto`` — compaction-aware.
@@ -556,27 +483,29 @@ class CrawlEngine:
         is exhausted.  Idempotent: re-running an uncommitted wave
         overwrites its partition dirs (Warehouse contract).
 
-        Job economy: all row counts ride on the table writes via
-        ``df.observe`` (no separate count jobs); the frontier size comes
-        from the previous wave's manifest — a wave runs ~7 Spark jobs
-        regardless of scale (SURVEY.md §4.3)."""
+        Job economy: every row count is read from the parquet footers of
+        the partitions the wave just wrote (``Warehouse.partition_rows``,
+        no Spark job); the frontier size comes from the previous wave's
+        manifest — a wave runs ~7 Spark jobs regardless of scale
+        (SURVEY.md §4.3)."""
         t0 = time.monotonic()
         spark = self.spark
+        rows = self.wh.partition_rows
 
         _prof: dict = {"wave": w}
         _last = t0
 
         def tick(label: str) -> None:
             nonlocal _last
-            if self.profile:
-                now = time.monotonic()
-                _prof[label] = round(now - _last, 3)
-                _last = now
+            now = time.monotonic()
+            _prof[label] = round(now - _last, 3)
+            _last = now
 
-        n_frontier = self._frontier_size(w)
+        man = self.wh.manifest(w)
+        n_frontier = man["n_frontier" if man["kind"] == "init" else "n_frontier_next"]
         if n_frontier == 0:
             return None
-        total_before = self._total_fetched(w)
+        total_before = man["n_total_fetched"]
         remaining_cap = None
         if self.max_render_tasks is not None:
             remaining_cap = self.max_render_tasks - total_before
@@ -592,7 +521,7 @@ class CrawlEngine:
         flagged = budget_flagged(frontier, n_salt=self.n_salt).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        pages = resolved = cand = part_acc = None
+        pages = resolved = cand = None
         try:
             fetch = flagged.filter(F.col("_fetch")).select(*FRONTIER_COLS)
             deferred = flagged.filter(~F.col("_fetch")).select(*FRONTIER_COLS)
@@ -623,17 +552,14 @@ class CrawlEngine:
                 1,
                 min(self.n_partitions, math.ceil(fetch_ub / self.rows_per_fetch_task)),
             )
-            obs_pages = Observation()
-            part_acc = spark.sparkContext.accumulator({}, _PART_COUNT_ACC)
             # hash- rather than round-robin-repartition: keyless repartition
             # first pays a local sort of its input for retry determinism
             # (SPARK-23207); hashing by url is deterministic without it and
             # spreads uniformly-costed fetches evenly
             pages = (
                 fetch.repartition(nparts, "url")
-                .mapInArrow(make_fetch_render_arrow(self.cfg, part_acc), PAGE_SCHEMA)
+                .mapInArrow(make_fetch_render_arrow(self.cfg), PAGE_SCHEMA)
                 .withColumn("part_id", F.spark_partition_id())
-                .observe(obs_pages, F.count(F.lit(1)).alias("n_fetched"))
             ).persist(StorageLevel.MEMORY_AND_DISK)
 
             images = pages.select(
@@ -641,22 +567,10 @@ class CrawlEngine:
                 "bytes", "w", "h", "fmt", "caption", "phash",
             )
             self.wh.overwrite_partition("images", w, images)  # job 1 (materializes)
+            n_fetched = rows("images", w)
             tick('job_images_udf')
-            n_fetched = int(obs_pages.get["n_fetched"])
-            tick('obs_fetched')
             if n_fetched == 0:  # budget can never defer ALL rows; 0 = done
                 return None
-            # per-partition lineage counts ride the fetch stage's accumulator
-            # (no extra job); exactness is verified against the observation
-            # and any mismatch (task retry double-count) falls back to the
-            # exact groupBy job
-            part_counts = {str(k): int(v) for k, v in part_acc.value.items()}
-            if sum(part_counts.values()) != n_fetched:
-                part_counts = {  # fallback job: per-partition lineage from cache
-                    str(r["part_id"]): r["count"]
-                    for r in pages.groupBy("part_id").count().collect()
-                }
-            tick('job_partcounts')
 
             # ---- link extraction -> edges (A4) + discovery candidates.
             # canonicalization runs ONCE: resolved (no image bytes) is the
@@ -678,10 +592,7 @@ class CrawlEngine:
                 .filter(F.col("dst").rlike("^https?://"))
                 .select("url", "depth", "seq", "pos", "dst")
             ).persist(StorageLevel.MEMORY_AND_DISK)
-            obs_edges = Observation()
-            edges = resolved.select(F.col("url").alias("src"), "dst").observe(
-                obs_edges, F.count(F.lit(1)).alias("n_links")
-            )
+            edges = resolved.select(F.col("url").alias("src"), "dst")
             # jobs 2+4 both depend only on the pages cache (materialized by
             # job 1) and write different tables: run them concurrently so the
             # smaller write hides inside the larger (guide §2.6).  fetch_log
@@ -701,6 +612,12 @@ class CrawlEngine:
                 _f_log.result()
                 _f_edges.result()  # job 4 (materializes resolved)
             pages.unpersist()  # resolved is materialized; bytes leave memory
+            # per-partition lineage: fetch_log is written straight from the
+            # pages cache (no exchange), so each row group holds one part_id
+            part_counts = {
+                str(k): v for k, v in rows("fetch_log", w, by="part_id").items()
+            }
+            n_links = rows("edges", w)
             tick('job_edges')
 
             # child seq = parent lineage + one hex digit (crawl_semantics rule
@@ -716,15 +633,8 @@ class CrawlEngine:
                 )
             ).persist(StorageLevel.MEMORY_AND_DISK)
 
-            n_links = int(obs_edges.get["n_links"])  # job 4 already ran; free
             seen_add, _ = self._admit(cand, self._read_seen(w), cand_hint=n_links)
             tick('admit_plan')
-            obs_seen = Observation()
-            seen_add = seen_add.observe(
-                obs_seen,
-                F.count(F.lit(1)).alias("n_new"),
-                F.sum(F.col("blocked").cast("int")).alias("n_blocked"),
-            )
             # rebalance before the partitioned write: without it every write
             # task emits one tiny file per shard it holds (tasks x shards
             # fragments per wave — 2,865 seen files by wave 6 at bench tier,
@@ -734,22 +644,7 @@ class CrawlEngine:
                 "seen", w + 1, seen_add.hint("rebalance", "shard"),
                 partition_by=SEEN_PARTITION_BY,
             )
-            got = _observed(obs_seen)
-            if got is not None:
-                n_new = int(got["n_new"])
-                n_blocked = int(got["n_blocked"] or 0)
-            else:
-                # the written partition is authoritative — count it from
-                # footers (0 in practice), with a real count job as the
-                # safety net
-                n_new = self._partition_rows("seen", w + 1)
-                n_blocked = (
-                    0
-                    if n_new == 0
-                    else self.wh.read(spark, "seen", wave=w + 1)
-                    .filter(F.col("blocked"))
-                    .count()
-                )
+            n_new = rows("seen", w + 1)
             tick('job_seen')
 
             # frontier additions come FROM the written seen partition — the
@@ -763,18 +658,16 @@ class CrawlEngine:
                 else spark.createDataFrame([], SEEN_READ_SCHEMA)
             )
             frontier_add = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
-            obs_next = Observation()
-            nxt = deferred.unionByName(frontier_add).observe(
-                obs_next, F.count(F.lit(1)).alias("n")
-            )
             # rebalance: the union otherwise writes one file per upstream
             # cached partition (~50 tiny files/wave)
-            self.wh.overwrite_partition("frontier", w + 1, nxt.hint("rebalance"))  # job 6
-            got = _observed(obs_next)
-            n_frontier_next = (
-                int(got["n"]) if got is not None
-                else self._partition_rows("frontier", w + 1)
+            self.wh.overwrite_partition(  # job 6
+                "frontier", w + 1,
+                deferred.unionByName(frontier_add).hint("rebalance"),
             )
+            n_frontier_next = rows("frontier", w + 1)
+            n_deferred = n_frontier - n_fetched
+            # frontier(w+1) = deferred ∪ unblocked additions; deferred = frontier − fetched
+            n_blocked = n_new - (n_frontier_next - n_deferred)
             tick('job_frontier')
             self._update_bloom(  # job 7 (driver fold, or distributed build)
                 added, wave_dir=self.wh.part_dir("seen", w + 1), n_rows=n_new
@@ -795,7 +688,6 @@ class CrawlEngine:
                 compacted_at = w + 1
             tick('job_compact')
 
-            n_deferred = n_frontier - n_fetched
             wall_ms = int((time.monotonic() - t0) * 1000)
             stats = {
                 "wave": w,
@@ -824,19 +716,13 @@ class CrawlEngine:
                 self.wh.expire_snapshots(self.snapshot_keep)
         finally:
             # every exit path (commit, early return, error) releases the
-            # wave's caches; the accumulator is deregistered last — the
-            # driver-global registry never evicts, and popping it before
-            # pages is gone would let a recomputed partition send a late
-            # update to an unknown id
+            # wave's caches
             for df in (flagged, pages, resolved, cand, *self._wave_cache):
                 if df is not None:
                     df.unpersist()
             self._wave_cache.clear()
-            if part_acc is not None:
-                _accumulatorRegistry.pop(part_acc.aid, None)
         tick("cleanup")
-        if self.profile:
-            self.phase_times.append(_prof)
+        self.phase_times.append(_prof)
         return stats
 
     def run(self, max_waves: int, fresh: bool = True) -> list[dict]:

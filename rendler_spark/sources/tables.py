@@ -16,7 +16,10 @@ module implements the Iceberg *shape* over plain Parquet:
   without a covering manifest is garbage and is overwritten on re-run —
   that makes wave re-execution idempotent and resume exact;
 * manifests carry per-partition row counts + wave metrics (the lineage
-  record the north rule asks for).
+  record the north rule asks for).  Every count is read back from the
+  parquet footers of the partitions a wave just wrote
+  (``partition_rows``) — the analogue of the record count Iceberg keeps
+  per data file, so the numbers describe the committed files themselves.
 
 Swapping in real Iceberg later = replacing this module's read/append with
 ``spark.table`` / ``writeTo(...).append()`` — the engine only talks to
@@ -59,12 +62,13 @@ class Warehouse:
         """(Re)write one wave partition of a table.  Any pre-existing dir is
         removed first so re-running an uncommitted wave is idempotent.
 
+        Removing the dir also keeps ``partition_rows`` exact: a crashed
+        wave's stale files never add to the re-run's footer counts.
+
         ``partition_by`` adds Hive sub-partition dirs inside the wave dir
-        (e.g. ``bucket=`` for images keyed by pmod(xxhash64(image_id), B),
-        ``shard=`` for the seen table) — at 10^10 scale this is what turns
-        a point lookup or a per-shard job into a pruned read instead of a
-        table scan.  Off by default in the sandbox: with small waves it
-        just multiplies small files.
+        (the seen table and its compacted snapshots always write
+        ``shard=``) — at 10^10 scale this is what turns a per-shard job
+        into a pruned read instead of a table scan.
         """
         path = self.part_dir(table, wave)
         if path.exists():
@@ -135,6 +139,34 @@ class Warehouse:
             )
         reader = spark.read.option("basePath", str(base))
         return reader.parquet(*[str(d) for d in dirs])
+
+    def partition_rows(self, table: str, wave: int, by: str | None = None):
+        """Row count of one written wave partition, read from its parquet
+        footers on the driver — metadata only, no Spark job.  A partition
+        dir without data files (a zero-row partitioned write) counts 0.
+
+        ``by`` names a column that is constant within every row group:
+        returns {value: rows} keyed by that column's min/max statistic.
+        A row group whose min != max (a write that mixed keys) fails the
+        assert instead of miscounting."""
+        import pyarrow.parquet as pq
+
+        metas = [
+            pq.read_metadata(p) for p in self.part_dir(table, wave).rglob("*.parquet")
+        ]
+        if by is None:
+            return sum(m.num_rows for m in metas)
+        counts: dict = {}
+        for m in metas:
+            col = m.schema.names.index(by)
+            for i in range(m.num_row_groups):
+                rg = m.row_group(i)
+                st = rg.column(col).statistics
+                assert st is not None and st.has_min_max and st.min == st.max, (
+                    f"{table}/wave={wave}: row group mixes {by} values"
+                )
+                counts[st.min] = counts.get(st.min, 0) + rg.num_rows
+        return counts
 
     # ----------------------------------------------------------- manifests
 

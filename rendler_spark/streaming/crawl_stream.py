@@ -40,7 +40,7 @@ one — no duplicate image/edge rows in the exact side table.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from rendler_spark import synthweb
 from rendler_spark.crawl_semantics import N_SHARDS
@@ -66,7 +66,6 @@ def _ingest_batch(
                 # Replay of an epoch that already committed: rewrite the
                 # same version (idempotent) rather than appending a new one.
                 version = last
-        obs = Observation()
         staged = (
             batch.select(
                 "url",
@@ -75,7 +74,6 @@ def _ingest_batch(
                 F.lit("").alias("seq"),
             )
             .mapInArrow(make_fetch_render_arrow(cfg), PAGE_SCHEMA)
-            .observe(obs, F.count(F.lit(1)).alias("n_fetched"))
             .persist()
         )
         try:
@@ -88,13 +86,13 @@ def _ingest_batch(
                 F.explode(F.split("links", LINK_SEP)).alias("dst"),
             ).filter(F.col("dst") != "")
             wh.overwrite_partition("edges", version - 1, edges)  # job 2 (cache)
-            # row count rides job 1's observed metrics — no third job
+            # row count from the footers job 1 wrote — no third job
             wh.commit(
                 version,
                 {
                     "kind": "stream_batch",
                     "epoch": int(epoch_id),
-                    "n_fetched": int(obs.get["n_fetched"]),
+                    "n_fetched": wh.partition_rows("images", version - 1),
                 },
             )
         finally:

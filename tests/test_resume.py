@@ -14,6 +14,11 @@ from rendler_spark.sources.tables import Warehouse
 
 CFG = synthweb.WebConfig()
 WAVES = 3
+#: the manifest counts read back from the written partitions' footers
+COUNT_KEYS = (
+    "n_frontier", "n_fetched", "n_deferred", "n_links", "n_new",
+    "n_robots_blocked", "n_frontier_next", "n_total_fetched", "partitions",
+)
 
 
 def _table_rows(spark, eng, table, cols):
@@ -81,34 +86,49 @@ def test_snapshot_keep_bounds_manifests_and_stays_identical(spark, tmp_path, ful
     shutil.rmtree(tmp_path, ignore_errors=True)
 
 
-def test_failed_wave_releases_caches_and_resumes_exactly(spark, tmp_path, full, monkeypatch):
-    """A wave that fails mid-way (here: its seen write) leaves no cached
-    frame and no registered accumulator behind, and resuming from the
-    last commit gives the uninterrupted crawl's tables."""
-    from pyspark.accumulators import _accumulatorRegistry
+#: where wave 1 is made to crash: each table write (images/edges/
+#: fetch_log at wave 1, seen/frontier at wave 2), the Bloom fold, the commit
+CRASH_AT = ("images", "fetch_log", "edges", "seen", "frontier", "_update_bloom", "commit")
+
+
+@pytest.mark.parametrize("phase", CRASH_AT)
+def test_failed_wave_releases_caches_and_resumes_exactly(
+    spark, tmp_path, full, monkeypatch, phase
+):
+    """A wave that fails at any phase leaves no cached frame behind, and
+    resuming from the last commit gives the uninterrupted crawl's tables
+    and manifest counts.  Every crash after the first write leaves stale
+    partition files behind, which the re-run must replace, not add to."""
 
     def persisted():  # other tests' leftovers may be there already
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
+    def crash(*a, **kw):
+        raise OSError(f"injected {phase} failure")
+
     before = persisted()
-    real = Warehouse.overwrite_partition
-
-    def failing(self, table, wave, *a, **kw):
-        if table == "seen" and wave == 2:  # wave 1's seen additions
-            raise OSError("injected seen-write failure")
-        return real(self, table, wave, *a, **kw)
-
     wh = str(tmp_path / "crash")
     eng = CrawlEngine(spark, CFG, wh)
     eng.init()
     eng.run_wave(0)
-    n_acc = len(_accumulatorRegistry)
-    monkeypatch.setattr(Warehouse, "overwrite_partition", failing)
+    if phase == "_update_bloom":
+        monkeypatch.setattr(CrawlEngine, "_update_bloom", crash)
+    elif phase == "commit":
+        monkeypatch.setattr(Warehouse, "commit", crash)
+    else:
+        real = Warehouse.overwrite_partition
+        at = 2 if phase in Warehouse.STATE_TABLES else 1
+
+        def failing(self, table, wave, *a, **kw):
+            if (table, wave) == (phase, at):
+                crash()
+            return real(self, table, wave, *a, **kw)
+
+        monkeypatch.setattr(Warehouse, "overwrite_partition", failing)
     with pytest.raises(OSError, match="injected"):
         eng.run_wave(1)
     monkeypatch.undo()
     assert persisted() <= before
-    assert len(_accumulatorRegistry) == n_acc
     assert eng.wh.last_version() == 1
 
     stats = CrawlEngine.resume(spark, CFG, wh, WAVES)
@@ -118,8 +138,12 @@ def test_failed_wave_releases_caches_and_resumes_exactly(spark, tmp_path, full, 
         "seen": ("url", "depth", "seq", "blocked"),
         "frontier": ("url", "host", "depth", "seq"),
         "edges": ("src", "dst", "wave"),
+        "fetch_log": ("wave", "host", "depth", "seq", "url", "part_id"),
         "images": ("image_id", "bytes", "w", "h", "fmt", "caption", "phash"),
     }.items():
         assert _table_rows(spark, full, table, cols) == _table_rows(
             spark, resumed, table, cols
         ), table
+    for v in (2, 3):
+        want, got = full.wh.manifest(v), resumed.wh.manifest(v)
+        assert {k: got[k] for k in COUNT_KEYS} == {k: want[k] for k in COUNT_KEYS}, v

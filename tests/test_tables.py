@@ -43,6 +43,26 @@ def test_sub_partitioning(spark, wh):
     assert df.filter("bucket = 2").count() == 10
 
 
+def test_partition_rows_from_footers(spark, wh):
+    """Footer counts: totals (sub-partitioned and empty writes too) and
+    per-key counts; a row group that mixes keys fails loudly."""
+    import pyspark.sql.functions as F
+
+    _write(spark, wh, "t", 0, 40, partition_by=["bucket"])
+    assert wh.partition_rows("t", 0) == 40
+    wh.overwrite_partition(
+        "t", 1, spark.range(0).withColumn("bucket", F.lit(0)), partition_by=["bucket"]
+    )
+    assert wh.partition_rows("t", 1) == 0
+    keyed = spark.range(30).repartition(3).withColumn("part_id", F.spark_partition_id())
+    wh.overwrite_partition("log", 0, keyed)
+    want = {r["part_id"]: r["count"] for r in keyed.groupBy("part_id").count().collect()}
+    assert wh.partition_rows("log", 0, by="part_id") == want
+    wh.overwrite_partition("log", 1, keyed.coalesce(1))
+    with pytest.raises(AssertionError, match="mixes part_id"):
+        wh.partition_rows("log", 1, by="part_id")
+
+
 def test_manifest_commit_and_last_version(spark, wh):
     assert wh.last_version() is None
     wh.commit(0, {"kind": "init"})
