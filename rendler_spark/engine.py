@@ -10,9 +10,10 @@ DataFrames (BASELINE.json:L6 "Each crawl wave is a batch iteration"):
       ├─ broadcast-join robots → crawl_delay budgets    (B3, C5)
       ├─ salted two-phase per-host top-K window         (E1-E3) — 1 shuffle
       │     fetch set ─────────────┐   deferred rows → frontier(w+1)
-      ├─ mapInArrow fetch+render UDF (Arrow batches)    (A2, H3, H4)
+      ├─ mapInArrow fetch+render UDF (Arrow batches)    (A2, H1-H4)
       │     → images rows (input_hint schema) + packed links
-      ├─ posexplode links → canonicalize pandas UDF     (H1, H2)
+      │       + canonical links (the wave's only Python stage)
+      ├─ posexplode canonical links → http(s) filter    (JVM)
       │     → edges(w)
       ├─ first-wins dedup (min(depth,seq) per URL)      (D3) — 1 shuffle
       ├─ Bloom-shard prefilter → exact left-anti join   (C1, C2, D6)
@@ -64,6 +65,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BooleanType
 from pyspark.storagelevel import StorageLevel
 
 from rendler_spark import codecs, synthweb, urlnorm
@@ -87,31 +89,29 @@ SEEN_READ_SCHEMA = (
 #: shard, so the anti-join's seen-side scan can be pruned to the shards
 #: the maybe-seen candidates name
 SEEN_PARTITION_BY = ["shard"]
+#: ``links`` is the page's raw hrefs, SEP-packed (fetch_log keeps them);
+#: ``dsts`` is the same hrefs canonicalized, position for position
 PAGE_SCHEMA = (
     "url string, host string, depth int, seq string, links string, "
+    "dsts array<string>, "
     "bytes binary, w int, h int, fmt string, caption string, phash bigint"
 )
+#: a canonical link the crawl follows (edges, discovery candidates)
+HTTP_RE = "^https?://"
 
 
 # --------------------------------------------------------------- UDFs
 
 
-from pyspark.sql.types import BooleanType, StringType  # noqa: E402
-
-
-@F.pandas_udf(StringType())
-def canon_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """H2: vectorized URL resolve+canonicalize (urlnorm)."""
-    return urlnorm.canonicalize(base, href)
-
-
 def _render_batch(cfg: synthweb.WebConfig, urls: pd.Series) -> dict:
-    """A2+H3+H4 fused kernel: fetch page, extract links, render image,
-    caption, phash for one batch of URLs.  The html string never leaves
-    the Python worker.  Returns plain arrays/lists (wrapper-agnostic)."""
+    """A2+H1-H4 fused kernel: fetch page, extract and canonicalize links,
+    render image, caption, phash for one batch of URLs.  The html string
+    never leaves the Python worker.  Returns one array or list per
+    produced column; ``dsts`` is already an Arrow list array."""
     hi, pj, _ = synthweb.parse_url(urls)
     html = synthweb.page_html(cfg, hi, pj)
     links = linkfns.extract_links(html)
+    dsts = linkfns.canonical_links(urls, links)
     caption = synthweb.page_caption(cfg, hi, pj)
     w, h, fidx = synthweb.image_params(cfg, hi, pj)
     coeffs = synthweb.render_coeffs(cfg, hi, pj)  # (N, 5), one batch mix
@@ -126,6 +126,7 @@ def _render_batch(cfg: synthweb.WebConfig, urls: pd.Series) -> dict:
         phashes.append(codecs.phash(px))
     return {
         "links": links.to_numpy(),
+        "dsts": dsts,
         "bytes": blobs,
         "w": w,
         "h": h,
@@ -155,6 +156,7 @@ def make_fetch_render_arrow(cfg: synthweb.WebConfig):
                 rb.column(rb.schema.get_field_index("depth")),
                 rb.column(rb.schema.get_field_index("seq")),
                 pa.array(out["links"], type=pa.string()),
+                out["dsts"],
                 pa.array(out["bytes"], type=pa.binary()),
                 pa.array(out["w"], type=pa.int32()),
                 pa.array(out["h"], type=pa.int32()),
@@ -163,7 +165,7 @@ def make_fetch_render_arrow(cfg: synthweb.WebConfig):
                 pa.array(out["phash"], type=pa.int64()),
             ]
             names = [
-                "url", "host", "depth", "seq", "links", "bytes",
+                "url", "host", "depth", "seq", "links", "dsts", "bytes",
                 "w", "h", "fmt", "caption", "phash",
             ]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
@@ -437,7 +439,7 @@ class CrawlEngine:
             self.spark.createDataFrame(pdf)
             .withColumn("depth", F.lit(0).cast("int"))
             .withColumn("host", F.regexp_extract("url", HOST_RE, 1))
-            .filter(F.col("url").rlike("^https?://"))
+            .filter(F.col("url").rlike(HTTP_RE))
         )
         seen_add, frontier_add = self._admit(first_wins(df), None)
         self.wh.overwrite_partition("seen", 0, seen_add, partition_by=SEEN_PARTITION_BY)
@@ -572,25 +574,18 @@ class CrawlEngine:
             if n_fetched == 0:  # budget can never defer ALL rows; 0 = done
                 return None
 
-            # ---- link extraction -> edges (A4) + discovery candidates.
-            # canonicalization runs ONCE: resolved (no image bytes) is the
-            # cached frame both edges and candidates derive from.  It reads
-            # the PAGES cache, not the fetch_log file: the cache is columnar,
-            # so projecting (url, depth, seq, links) never deserializes the
-            # image-bytes column, and the per-wave disk round trip goes away.
+            # ---- edges (A4) + discovery candidates.  The fetch kernel
+            # already canonicalized every link, so this is JVM only:
+            # resolved (no image bytes) is the cached frame both edges and
+            # candidates derive from.  It reads the PAGES cache, not the
+            # fetch_log file: the cache is columnar, so projecting (url,
+            # depth, seq, dsts) never deserializes the image-bytes column.
             resolved = (
                 pages.select(
-                    "url",
-                    "depth",
-                    "seq",
-                    F.posexplode(F.split(F.col("links"), linkfns.SEP)).alias(
-                        "pos", "href"
-                    ),
+                    "url", "depth", "seq",
+                    F.posexplode("dsts").alias("pos", "dst"),
                 )
-                .filter(F.col("href") != "")
-                .withColumn("dst", canon_udf(F.col("url"), F.col("href")))
-                .filter(F.col("dst").rlike("^https?://"))
-                .select("url", "depth", "seq", "pos", "dst")
+                .filter(F.col("dst").rlike(HTTP_RE))
             ).persist(StorageLevel.MEMORY_AND_DISK)
             edges = resolved.select(F.col("url").alias("src"), "dst")
             # jobs 2+4 both depend only on the pages cache (materialized by

@@ -9,6 +9,7 @@ match — no Python in the path (SURVEY.md §2B B3).
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -27,8 +28,19 @@ ROBOTS_SCHEMA = StructType(
 
 
 def robots_df(spark: SparkSession, cfg: synthweb.WebConfig) -> DataFrame:
-    """The synthetic robots 'fetch' — one row per host (FIXTURES.md §1)."""
-    return spark.createDataFrame(synthweb.robots(cfg), ROBOTS_SCHEMA)
+    """The synthetic robots 'fetch' — one row per host (FIXTURES.md §1).
+
+    Handed to Spark as one Arrow table, so it plans as a JVM-resident
+    ``LocalTableScan``: every broadcast join that reads it re-uses the
+    rows instead of re-running a Python RDD.  Arrow keeps a missing
+    ``crawl_delay`` null (never NaN) and an empty ``disallow`` as []."""
+    rows = synthweb.robots(cfg)
+    table = pa.table({
+        "host": pa.array([r[0] for r in rows], pa.string()),
+        "disallow": pa.array([r[1] for r in rows], pa.list_(pa.string())),
+        "crawl_delay": pa.array([r[2] for r in rows], pa.float64()),
+    })
+    return spark.createDataFrame(table, ROBOTS_SCHEMA)
 
 
 def with_robots(df: DataFrame, robots: DataFrame, url_col: str = "url") -> DataFrame:

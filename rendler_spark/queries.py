@@ -22,6 +22,8 @@ registered without oracle SQL -> the driver records a rows-only check.
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -36,14 +38,15 @@ TABLES = (
 def _scan_units(sf_dir: str, name: str, cap: int = 64) -> int:
     """Upper bound on useful scan tasks for a parquet table: its total
     row-group count (Spark cannot split a scan below one row group).
-    Stops counting at ``cap`` so the footer probe stays O(cap) at scale."""
+    Stops counting at ``cap`` so the footer probe stays O(cap) at scale.
+    A failed probe is logged as a warning and reads as ``cap``."""
     import glob as _glob
     import os as _os
 
     import pyarrow.parquet as _pq
 
+    p = f"{sf_dir}/{name}.parquet"
     try:
-        p = f"{sf_dir}/{name}.parquet"
         files = (
             _glob.glob(f"{p}/**/*.parquet", recursive=True)
             if _os.path.isdir(p)
@@ -55,9 +58,13 @@ def _scan_units(sf_dir: str, name: str, cap: int = 64) -> int:
             if n >= cap:
                 break
         return n
-    except Exception:
-        return cap  # probe failure must never fail the query: act as
-        # "plenty of splits" and leave the plan untouched
+    except Exception as e:
+        # probe failure must never fail the query: act as "plenty of
+        # splits" and leave the plan untouched
+        logging.getLogger("rendler_spark").warning(
+            "row-group probe of %s failed, scan left as is: %r", p, e
+        )
+        return cap
 
 
 def _spread_scan(spark, df: DataFrame, sf_dir: str, table: str, *keys: str):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -54,6 +55,8 @@ def _warm_engine(spark: SparkSession) -> None:
     the JVM-warmup analogue of a connection pool's eager init.  Runs
     once per JVM (guarded), costs a few seconds at session start, and
     can be disabled with SPARK_GRAFT_WARMUP=0 (the test suite does).
+    Best-effort: a failure is logged as a warning on the
+    ``rendler_spark`` logger and the session starts cold.
     """
     if getattr(spark, "_rendler_warm", False):
         return
@@ -125,7 +128,9 @@ def _warm_engine(spark: SparkSession) -> None:
             yield from it
 
         _noop(df.limit(4096).repartition(n).mapInArrow(_ar, "id long"))
-    except Exception:
-        pass  # warmup is strictly best-effort
+    except Exception as e:
+        logging.getLogger("rendler_spark").warning(
+            "engine warm-up failed, the session starts cold: %r", e
+        )
     finally:
         spark.sparkContext.setJobDescription(None)

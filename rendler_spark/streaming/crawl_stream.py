@@ -16,11 +16,12 @@ Pipeline:  readStream(url)
            -> foreachBatch: mapInArrow fetch+render kernel (the wave
               loop's own wrapper; inside foreachBatch the batch is a
               static frame)
-              -> append images (input_hint schema) + edges, commit manifest
+              -> append images (input_hint schema) + edges (the
+                 kernel's canonical http(s) links, as the wave loop
+                 writes them), commit manifest
 
 Input URLs are assumed canonical (the synthetic web emits canonical
-forms); a production feed would insert the canonicalizer UDF
-(engine.canon_udf) ahead of the hash step.
+forms).
 
 Warehouse convention (shared with the wave engine, sources/tables.py
 STATE_TABLES): non-state wave=N output partitions are committed by
@@ -44,8 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rendler_spark import synthweb
 from rendler_spark.crawl_semantics import N_SHARDS
-from rendler_spark.engine import PAGE_SCHEMA, make_fetch_render_arrow
-from rendler_spark.functions.links import SEP as LINK_SEP
+from rendler_spark.engine import HTTP_RE, PAGE_SCHEMA, make_fetch_render_arrow
 from rendler_spark.sources.tables import Warehouse
 from rendler_spark.streaming.stateful import streaming_seen_dedup
 
@@ -82,9 +82,8 @@ def _ingest_batch(
             )
             wh.overwrite_partition("images", version - 1, images)  # job 1
             edges = staged.select(
-                F.col("url").alias("src"),
-                F.explode(F.split("links", LINK_SEP)).alias("dst"),
-            ).filter(F.col("dst") != "")
+                F.col("url").alias("src"), F.explode("dsts").alias("dst")
+            ).filter(F.col("dst").rlike(HTTP_RE))
             wh.overwrite_partition("edges", version - 1, edges)  # job 2 (cache)
             # row count from the footers job 1 wrote — no third job
             wh.commit(

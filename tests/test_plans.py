@@ -14,11 +14,14 @@ from rendler_spark.queries import QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def _explain(spark, name):
-    df = QUERIES[name](spark, SF)
+def _formatted(spark, df):
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _explain(spark, name):
+    return _formatted(spark, QUERIES[name](spark, SF))
 
 
 def test_filter_pushdown(spark):
@@ -180,3 +183,28 @@ def test_corpus_e2e_single_documents_scan(spark):
     s = _explain(spark, "q_corpus_e2e")
     assert s.count("documents.parquet") == 1, s
     assert "_salt" in s
+
+
+# ------------------------------------------------------- crawl wave plans
+
+
+def test_robots_table_is_jvm_resident(spark):
+    """The robots table plans as a LocalTableScan: the broadcast joins
+    that read it every wave must not re-run a Python RDD."""
+    from rendler_spark.operators.robots import robots_df
+    from rendler_spark.synthweb import WebConfig
+
+    s = _formatted(spark, robots_df(spark, WebConfig()))
+    assert "LocalTableScan" in s and "ExistingRDD" not in s, s
+
+
+def test_robots_table_rows_match_synthweb(spark):
+    """Row for row: a missing crawl_delay stays null (not NaN) and an
+    empty disallow list stays []."""
+    from rendler_spark.operators.robots import robots_df
+    from rendler_spark.synthweb import WebConfig, robots
+
+    cfg = WebConfig(n_hosts=16)
+    got = [tuple(r) for r in robots_df(spark, cfg).collect()]
+    assert got == robots(cfg)
+    assert any(d is None for _, _, d in got) and any(not a for _, a, _ in got)

@@ -117,10 +117,12 @@ def test_crawl_ingest_stream_foreachbatch(spark, tmp_path, mode, kind):
     both dedup state shapes (exact sets / bounded blob)."""
     import pandas as pd
 
+    from rendler_spark import urlnorm
+    from rendler_spark.functions.links import extract_links_list
     from rendler_spark.sources.tables import Warehouse
     from rendler_spark.streaming.crawl_stream import crawl_ingest_stream
     from rendler_spark.synthweb import (
-        WebConfig, page_caption, page_url, parse_url, render_encoded,
+        WebConfig, page_caption, page_html, page_url, parse_url, render_encoded,
     )
 
     cfg = WebConfig()
@@ -158,7 +160,18 @@ def test_crawl_ingest_stream_foreachbatch(spark, tmp_path, mode, kind):
     assert manifests, "stream produced no committed manifests"
     assert all(m["kind"] == "stream_batch" for m in manifests)
     assert sum(m.get("n_fetched", 0) for m in manifests) == len(want_urls)
-    assert wh.read(spark, "edges").count() > 0
+    # edges are canonical and http(s) only, the same form the wave loop
+    # writes: each page's raw hrefs canonicalized against the page URL
+    raw = extract_links_list(page_html(cfg, hi, pj))
+    want_edges = [
+        (u, d)
+        for u, hrefs in zip(want_urls, raw)
+        for d in (urlnorm.canonicalize_one(u, h) for h in hrefs)
+        if d.startswith(("http://", "https://"))
+    ]
+    assert want_edges
+    got_edges = [(r["src"], r["dst"]) for r in wh.read(spark, "edges").collect()]
+    assert sorted(got_edges) == sorted(want_edges)
     # commit-offset convention: manifest V covers output waves < V, so the
     # as-of-V read returns exactly the first V batches' rows
     running = 0
