@@ -20,6 +20,25 @@ DataFrames (BASELINE.json:L6 "Each crawl wave is a batch iteration"):
       ├─ robots gate → seen additions (blocked flagged) (B3)
       └─ commit wave manifest: images/edges/seen/frontier(w+1)/metrics
 
+``run_wave`` runs that as named phases, one method each.  Every phase is
+timed into ``CrawlEngine.phase_times`` under the name on the left, and
+its Spark jobs run in the job group ``w<w>/<name>`` (e.g. ``w1/job_seen``),
+so a Spark event log ties each job to its wave and phase:
+
+    job_images_udf      plan-fetch (budget split, max_render_tasks cap),
+                        fetch-render, images(w) write
+    job_edges           links: resolved, fetch_log(w) + edges(w) writes
+    admit_plan          admit: candidates, first-wins, seen prefilter plan
+    job_seen            seen(w+1) write (runs the admission chain)
+    job_frontier        frontier(w+1) = deferred ∪ unblocked seen(w+1)
+    job_bloom           fold seen(w+1) into the Bloom/cuckoo state
+    job_compact         seen snapshot every ``seen_compact_every`` waves
+    job_metrics_commit  wave_metrics(w) row + manifest w+1
+    cleanup             release the wave's cached frames
+
+``init`` admits the seeds and ends with the same seen, frontier, bloom
+and commit phases (frontier(0) has nothing deferred).
+
 Every count in the manifest (fetched, links, new, blocked, next frontier,
 per-partition lineage) is read from the parquet footers of the
 partitions the wave just wrote — one source, no count jobs.
@@ -59,7 +78,10 @@ from __future__ import annotations
 import math
 import shutil
 import time
-from typing import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from functools import partial
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -98,6 +120,14 @@ PAGE_SCHEMA = (
 )
 #: a canonical link the crawl follows (edges, discovery candidates)
 HTTP_RE = "^https?://"
+#: seen-prefilter sizes per shard, for either ``filter_kind``
+#: (operators/seenfilter.py)
+FILTER_PARAMS = {
+    "bloom_bits": 1 << 16,
+    "bloom_k": 6,
+    "cuckoo_buckets": 1 << 13,
+    "cuckoo_bucket_size": 4,
+}
 
 
 # --------------------------------------------------------------- UDFs
@@ -203,6 +233,16 @@ def first_wins(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------- engine
 
 
+class FetchPlan(NamedTuple):
+    """What plan-fetch hands the rest of the wave."""
+
+    fetch: DataFrame  # this wave's fetch set
+    deferred: DataFrame  # budget- or cap-deferred rows → frontier(w+1)
+    n_frontier: int
+    n_total_before: int  # URLs fetched by earlier waves
+    n_tasks: int  # fetch/render task count
+
+
 class CrawlEngine:
     """Distributed URL frontier + fetch scheduler (north_rule)."""
 
@@ -212,18 +252,13 @@ class CrawlEngine:
         cfg: synthweb.WebConfig,
         warehouse: str,
         *,
-        budget: int | None = None,
         max_render_tasks: int | None = None,  # global cumulative fetch cap
         # (crawl_semantics rule 7, reference --max-render-tasks semantics)
         n_salt: int = 8,
         n_shards: int = N_SHARDS,
-        bloom_bits: int = 1 << 16,
-        bloom_k: int = 6,
         bloom_mode: str = "broadcast",  # or "off" (pure exact anti-join)
         filter_kind: str = "bloom",  # or "cuckoo" (deletion support;
         # north rule names "Bloom/cuckoo" — seenfilter.py dispatch)
-        cuckoo_buckets: int = 1 << 13,
-        cuckoo_bucket_size: int = 4,
         n_partitions: int | None = None,
         rows_per_fetch_task: int = 64,
         seen_compact_every: int = 8,  # OR-merge seen waves every N (0 = off)
@@ -237,12 +272,10 @@ class CrawlEngine:
         # lineage encodes one hex digit per link position (crawl_semantics)
         assert cfg.max_links < SEQ_BASE, "lineage digit overflow: max_links >= 16"
         self.wh = Warehouse(warehouse)
-        self.budget = cfg.budget if budget is None else budget
+        self.budget = cfg.budget
         self.max_render_tasks = max_render_tasks
         self.n_salt = n_salt
         self.n_shards = n_shards
-        self.bloom_bits = bloom_bits
-        self.bloom_k = bloom_k
         if bloom_mode not in ("broadcast", "off"):
             raise ValueError(
                 f"bloom_mode must be 'broadcast' or 'off', not {bloom_mode!r}"
@@ -250,22 +283,15 @@ class CrawlEngine:
         self.bloom_mode = bloom_mode
         assert filter_kind in seenfilter.KINDS, filter_kind
         self.filter_kind = filter_kind
-        self.filter_params = {
-            "bloom_bits": bloom_bits,
-            "bloom_k": bloom_k,
-            "cuckoo_buckets": cuckoo_buckets,
-            "cuckoo_bucket_size": cuckoo_bucket_size,
-        }
+        self.filter_params = FILTER_PARAMS
         self.n_partitions = n_partitions or spark.sparkContext.defaultParallelism
         self.rows_per_fetch_task = rows_per_fetch_task
         self.seen_compact_every = seen_compact_every
         self.snapshot_keep = snapshot_keep
-        self._wave_cache: list[DataFrame] = []
-        self._n_seen_shards_scanned: int | None = None
         self.robots = robots_df(spark, cfg)
         self._shard_blobs: dict[int, bytes] = {}
         self._bc = None
-        #: one {phase: seconds} dict per completed wave
+        #: one {phase: seconds} dict per completed wave (run_wave's phases)
         self.phase_times: list[dict] = []
 
     # ----------------------------------------------------- bloom state
@@ -350,10 +376,13 @@ class CrawlEngine:
         self,
         candidates: DataFrame,
         seen: DataFrame | None,
+        *,
+        cache: list[DataFrame],
         cand_hint: int | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, int | None]:
         """Dedup candidates against the seen set (C1/C2), gate by robots
-        (B3); returns (seen_additions, frontier_additions).
+        (B3); returns (seen_additions, seen shards scanned), the count None
+        when no prefilter ran.  A frame it persists goes on ``cache``.
 
         candidates: (url, host, depth, seq), already first-wins-deduped.
         ``cand_hint``: upper bound on the candidate count (the wave's link
@@ -367,7 +396,7 @@ class CrawlEngine:
         cand = candidates.withColumn("url_hash", F.xxhash64("url")).withColumn(
             "shard", F.pmod("url_hash", F.lit(self.n_shards)).cast("int")
         )
-        self._n_seen_shards_scanned = None
+        n_scanned = None
         if seen is not None:
             flagged = None
             if self.bloom_mode == "broadcast" and self._bc is not None:
@@ -376,7 +405,7 @@ class CrawlEngine:
                 flagged = cand.withColumn(
                     "_maybe", self._maybe_seen_udf()(F.col("url_hash"))
                 ).persist(StorageLevel.MEMORY_AND_DISK)
-                self._wave_cache.append(flagged)
+                cache.append(flagged)
                 # prune the seen-side SCAN to shards that can possibly
                 # match: with the seen table Hive-sub-partitioned by shard
                 # this turns the per-wave re-scan of the whole seen set
@@ -386,7 +415,7 @@ class CrawlEngine:
                 # shard is hit anyway (see ``cand_hint`` above) — the
                 # collect is a whole extra Spark job per wave.
                 if cand_hint is not None and cand_hint >= 64 * self.n_shards:
-                    self._n_seen_shards_scanned = self.n_shards
+                    n_scanned = self.n_shards
                 else:
                     shards = sorted(
                         int(r["shard"])
@@ -395,7 +424,7 @@ class CrawlEngine:
                         .distinct()
                         .collect()
                     )
-                    self._n_seen_shards_scanned = len(shards)
+                    n_scanned = len(shards)
                     if not shards:
                         seen = seen.filter(F.lit(False))
                     elif len(shards) < self.n_shards:
@@ -415,18 +444,18 @@ class CrawlEngine:
                 new = cand.join(seen_keys, "url", "left_anti")
         else:
             new = cand
-        gated = with_robots(new, self.robots)
-        seen_add = gated.select(
+        seen_add = with_robots(new, self.robots).select(
             "url_hash", "url", "host", "depth", "seq", "shard", "blocked"
         )
-        frontier_add = gated.filter(~F.col("blocked")).select(*FRONTIER_COLS)
-        return seen_add, frontier_add
+        return seen_add, n_scanned
 
     # ----------------------------------------------------- lifecycle
 
     def init(self, fresh: bool = True) -> None:
         """Version 0: admit the seed list (A1) — seeds are canonicalized,
-        first-wins-deduped, robots-gated exactly like discoveries."""
+        first-wins-deduped, robots-gated exactly like discoveries, then
+        written, folded and committed by the phases that end a wave:
+        frontier(0) is the unblocked rows of seen(0), nothing deferred."""
         if fresh and self.wh.root.exists():
             shutil.rmtree(self.wh.root)
             self.wh = Warehouse(self.wh.root)
@@ -441,18 +470,15 @@ class CrawlEngine:
             .withColumn("host", F.regexp_extract("url", HOST_RE, 1))
             .filter(F.col("url").rlike(HTTP_RE))
         )
-        seen_add, frontier_add = self._admit(first_wins(df), None)
-        self.wh.overwrite_partition("seen", 0, seen_add, partition_by=SEEN_PARTITION_BY)
-        self.wh.overwrite_partition("frontier", 0, frontier_add)
-        self._update_bloom(
-            self.wh.read(self.spark, "seen", wave=0),
-            wave_dir=self.wh.part_dir("seen", 0),
-            n_rows=self.wh.partition_rows("seen", 0),
-        )
-        self.wh.commit(0, {
+        # no seen set yet: nothing to prefilter, so nothing is cached
+        seen_add, _ = self._admit(first_wins(df), None, cache=[])
+        n_new = self._write_seen(0, seen_add)
+        added, n_frontier = self._write_frontier(0, n_new, None)
+        self._update_bloom(added, self.wh.part_dir("seen", 0), n_new)
+        self._commit(0, {
             "kind": "init",
             "n_seeds": len(canon),
-            "n_frontier": self.wh.partition_rows("frontier", 0),
+            "n_frontier": n_frontier,
             "n_total_fetched": 0,
         })
 
@@ -480,42 +506,33 @@ class CrawlEngine:
         delta = self.wh.read(self.spark, "seen", upto=upto, start=c + 1).drop("wave")
         return base.unionByName(delta)
 
-    def run_wave(self, w: int) -> dict | None:
-        """One batch iteration; returns wave stats or None if the frontier
-        is exhausted.  Idempotent: re-running an uncommitted wave
-        overwrites its partition dirs (Warehouse contract).
+    # ----------------------------------------------------- wave phases
 
-        Job economy: every row count is read from the parquet footers of
-        the partitions the wave just wrote (``Warehouse.partition_rows``,
-        no Spark job); the frontier size comes from the previous wave's
-        manifest — a wave runs ~7 Spark jobs regardless of scale
-        (SURVEY.md §4.3)."""
-        t0 = time.monotonic()
-        spark = self.spark
-        rows = self.wh.partition_rows
+    @contextmanager
+    def _phase(self, w: int, times: dict[str, float], name: str):
+        """Time one phase of wave ``w`` into ``times`` and put the Spark
+        jobs it runs in the job group ``w<w>/<name>``."""
+        group = f"w{w}/{name}"
+        self.spark.sparkContext.setJobGroup(group, group)
+        t = time.monotonic()
+        yield
+        times[name] = round(time.monotonic() - t, 3)
 
-        _prof: dict = {"wave": w}
-        _last = t0
-
-        def tick(label: str) -> None:
-            nonlocal _last
-            now = time.monotonic()
-            _prof[label] = round(now - _last, 3)
-            _last = now
-
+    def _plan_fetch(self, w: int, cache: list[DataFrame]) -> FetchPlan | None:
+        """plan-fetch: split frontier(w) into the fetch set and the
+        deferred rest by the per-host politeness budget (E1-E3), then by
+        the ``max_render_tasks`` cap.  None when the frontier is empty or
+        the cap is spent (the frontier stays intact, so it is resumable)."""
         man = self.wh.manifest(w)
         n_frontier = man["n_frontier" if man["kind"] == "init" else "n_frontier_next"]
-        if n_frontier == 0:
-            return None
         total_before = man["n_total_fetched"]
-        remaining_cap = None
+        cap = None
         if self.max_render_tasks is not None:
-            remaining_cap = self.max_render_tasks - total_before
-            if remaining_cap <= 0:
-                return None  # cap exhausted; frontier intact, resumable
-
+            cap = self.max_render_tasks - total_before
+        if n_frontier == 0 or (cap is not None and cap <= 0):
+            return None
         frontier = (
-            self.wh.read(spark, "frontier", wave=w)
+            self.wh.read(self.spark, "frontier", wave=w)
             .drop("wave")
             .join(F.broadcast(self.robots.select("host", "crawl_delay")), "host", "left")
             .withColumn("eff_budget", effective_budget_col(self.budget))
@@ -523,201 +540,246 @@ class CrawlEngine:
         flagged = budget_flagged(frontier, n_salt=self.n_salt).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        pages = resolved = cand = None
+        cache.append(flagged)
+        fetch = flagged.filter(F.col("_fetch")).select(*FRONTIER_COLS)
+        deferred = flagged.filter(~F.col("_fetch")).select(*FRONTIER_COLS)
+        if cap is not None and cap < n_frontier:
+            # crawl_semantics rule 7: global cap — allowance goes to the
+            # smallest (depth, host, seq) rows; rest deferred unchanged.
+            # orderBy+limit plans as TakeOrderedAndProject for small caps
+            # and sort+GlobalLimit above the top-k threshold; the anti-join
+            # recovering the remainder broadcasts the (capped) selection.
+            sel = (
+                fetch.orderBy("depth", "host", "seq")
+                .limit(cap)
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            cache.append(sel)
+            deferred = deferred.unionByName(
+                fetch.join(sel.select("url"), "url", "left_anti")
+            )
+            fetch = sel
+        # upper-bound the fetch set by frontier size (and the cap, when
+        # binding) to pick the task count without a count job
+        fetch_ub = n_frontier if cap is None else min(n_frontier, cap)
+        n_tasks = max(
+            1, min(self.n_partitions, math.ceil(fetch_ub / self.rows_per_fetch_task))
+        )
+        return FetchPlan(fetch, deferred, n_frontier, total_before, n_tasks)
+
+    def _fetch_render(
+        self, w: int, plan: FetchPlan, cache: list[DataFrame]
+    ) -> tuple[DataFrame, int] | None:
+        """fetch-render: the Arrow kernel over the fetch set, cached as
+        ``pages``; writing images(w) materializes it.  Returns (pages,
+        rows fetched), or None when nothing was fetched (the budget can
+        never defer ALL rows, so 0 means done)."""
+        # hash- rather than round-robin-repartition: keyless repartition
+        # first pays a local sort of its input for retry determinism
+        # (SPARK-23207); hashing by url is deterministic without it and
+        # spreads uniformly-costed fetches evenly
+        pages = (
+            plan.fetch.repartition(plan.n_tasks, "url")
+            .mapInArrow(make_fetch_render_arrow(self.cfg), PAGE_SCHEMA)
+            .withColumn("part_id", F.spark_partition_id())
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        cache.append(pages)
+        images = pages.select(
+            F.col("url").alias("image_id"),
+            "bytes", "w", "h", "fmt", "caption", "phash",
+        )
+        self.wh.overwrite_partition("images", w, images)
+        n_fetched = self.wh.partition_rows("images", w)
+        return (pages, n_fetched) if n_fetched else None
+
+    def _links(
+        self, w: int, pages: DataFrame, cache: list[DataFrame]
+    ) -> tuple[DataFrame, int, dict[str, int]]:
+        """links: every canonical http(s) link of the wave's pages as the
+        cached ``resolved`` frame (JVM only: the fetch kernel already
+        canonicalized them), written as edges(w) next to fetch_log(w).
+        Releases ``pages`` once ``resolved`` is materialized, so image
+        bytes leave memory before admission.  Returns (resolved, link
+        count, per-partition lineage)."""
+        # resolved reads the PAGES cache, not the fetch_log file: the cache
+        # is columnar, so projecting (url, depth, seq, dsts) never
+        # deserializes the image-bytes column
+        resolved = (
+            pages.select(
+                "url", "depth", "seq",
+                F.posexplode("dsts").alias("pos", "dst"),
+            )
+            .filter(F.col("dst").rlike(HTTP_RE))
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        cache.append(resolved)
+        writes = {
+            # the packed raw links, for downstream/export consumers
+            "fetch_log": pages.select("url", "host", "depth", "seq", "part_id", "links"),
+            "edges": resolved.select(F.col("url").alias("src"), "dst"),
+        }
+        sc = self.spark.sparkContext
+        group = sc.getLocalProperty("spark.jobGroup.id")
+
+        def write(table: str) -> None:
+            sc.setJobGroup(group, group)  # pool threads do not inherit it
+            self.wh.overwrite_partition(table, w, writes[table])
+
+        # both writes depend only on the pages cache (materialized by the
+        # images write) and write different tables: run them concurrently
+        # so the smaller write hides inside the larger (guide §2.6)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            for done in [pool.submit(write, table) for table in writes]:
+                done.result()
+        pages.unpersist()  # the edges write materialized resolved
+        # per-partition lineage: fetch_log is written straight from the
+        # pages cache (no exchange), so each row group holds one part_id
+        partitions = {
+            str(k): v
+            for k, v in self.wh.partition_rows("fetch_log", w, by="part_id").items()
+        }
+        return resolved, self.wh.partition_rows("edges", w), partitions
+
+    def _admit_links(
+        self, w: int, resolved: DataFrame, n_links: int, cache: list[DataFrame]
+    ) -> tuple[DataFrame, int | None]:
+        """admit: each link becomes a discovery candidate, first-wins
+        deduped (cached) and admitted against seen(<=w)."""
+        # child seq = parent lineage + one hex digit (crawl_semantics rule
+        # 1: string lineage never overflows, unlike seq*16+pos on int64)
+        cand = first_wins(
+            resolved.select(
+                F.col("dst").alias("url"),
+                F.regexp_extract("dst", HOST_RE, 1).alias("host"),
+                (F.col("depth") + 1).cast("int").alias("depth"),
+                F.concat(
+                    F.col("seq"), F.lower(F.conv(F.col("pos"), 10, 16))
+                ).alias("seq"),
+            )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        cache.append(cand)
+        return self._admit(cand, self._read_seen(w), cache=cache, cand_hint=n_links)
+
+    def _write_seen(self, v: int, seen_add: DataFrame) -> int:
+        """seen-write: the admitted rows as seen(v); returns their count."""
+        # rebalance before the partitioned write: without it every write
+        # task emits one tiny file per shard it holds (tasks x shards
+        # fragments per wave — 2,865 seen files by wave 6 at bench tier,
+        # measured); AQE sizes the rebalanced partitions, so files track
+        # data volume at any scale (guide §6 small-files).
+        self.wh.overwrite_partition(
+            "seen", v, seen_add.hint("rebalance", "shard"),
+            partition_by=SEEN_PARTITION_BY,
+        )
+        return self.wh.partition_rows("seen", v)
+
+    def _write_frontier(
+        self, v: int, n_new: int, deferred: DataFrame | None
+    ) -> tuple[DataFrame, int]:
+        """frontier-write: frontier(v) = ``deferred`` ∪ the unblocked rows
+        of seen(v), read back from the written partition so the admission
+        chain runs exactly once.  Returns (seen(v) as read, frontier(v)'s
+        row count)."""
+        # A zero-addition wave writes a file-less partition dir (nothing
+        # to infer a schema from), so substitute an explicit-schema empty
+        # frame — downstream consumers are all by-name.
+        added = (
+            self.wh.read(self.spark, "seen", wave=v)
+            if n_new > 0
+            else self.spark.createDataFrame([], SEEN_READ_SCHEMA)
+        )
+        rows = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
+        if deferred is not None:
+            rows = deferred.unionByName(rows)
+        # rebalance: the union otherwise writes one file per upstream
+        # cached partition (~50 tiny files/wave)
+        self.wh.overwrite_partition("frontier", v, rows.hint("rebalance"))
+        return added, self.wh.partition_rows("frontier", v)
+
+    def _compact(self, v: int) -> int | None:
+        """compact: every ``seen_compact_every`` versions, fold seen(<=v)
+        (newest snapshot + deltas) into one shard-partitioned snapshot;
+        amortized one extra seen read+write per period.  Returns v when
+        it compacted."""
+        if not self.seen_compact_every or v % self.seen_compact_every:
+            return None
+        self.wh.overwrite_partition(
+            "seen_compact", v, self._read_seen(v).hint("rebalance", "shard"),
+            partition_by=SEEN_PARTITION_BY,
+        )
+        return v
+
+    def _write_metrics(self, w: int, stats: dict) -> None:
+        """The wave's stats as one wave_metrics row: a driver-side parquet
+        write, no Spark job."""
+        row = {k: v for k, v in stats.items() if k != "partitions"}
+        self.wh.overwrite_partition_local("wave_metrics", w, pd.DataFrame([row]))
+
+    def _commit(self, v: int, info: dict) -> None:
+        """commit: the manifest that makes version v's partitions the
+        crawl state; then expire manifests past ``snapshot_keep``."""
+        self.wh.commit(v, info)
+        if self.snapshot_keep:
+            self.wh.expire_snapshots(self.snapshot_keep)
+
+    def run_wave(self, w: int) -> dict | None:
+        """One batch iteration as named phases (module docstring), each
+        timed into ``phase_times`` and running its Spark jobs in the job
+        group ``w<w>/<phase>``.  Returns the wave stats, or None when there
+        is nothing to do (empty frontier, spent cap, nothing fetched).
+        Idempotent: re-running an uncommitted wave overwrites its
+        partition dirs (Warehouse contract).  Every frame a phase caches
+        goes on one list, released however the wave ends; every count is
+        read from the parquet footers the wave wrote, never a count job."""
+        t0 = time.monotonic()
+        times: dict[str, float] = {}
+        cache: list[DataFrame] = []
+        phase = partial(self._phase, w, times)
         try:
-            fetch = flagged.filter(F.col("_fetch")).select(*FRONTIER_COLS)
-            deferred = flagged.filter(~F.col("_fetch")).select(*FRONTIER_COLS)
-            if remaining_cap is not None and remaining_cap < n_frontier:
-                # crawl_semantics rule 7: global cap — allowance goes to the
-                # smallest (depth, host, seq) rows; rest deferred unchanged.
-                # orderBy+limit plans as TakeOrderedAndProject for small caps
-                # and sort+GlobalLimit above the top-k threshold; the anti-join
-                # recovering the remainder broadcasts the (capped) selection.
-                sel = (
-                    fetch.orderBy("depth", "host", "seq")
-                    .limit(remaining_cap)
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                self._wave_cache.append(sel)
-                deferred = deferred.unionByName(
-                    fetch.join(sel.select("url"), "url", "left_anti")
-                )
-                fetch = sel
-
-            # ---- fetch + render (Arrow UDF stage); upper-bound the fetch set
-            # by frontier size (and the cap, when binding) to pick the task
-            # count without a count job
-            fetch_ub = (
-                n_frontier if remaining_cap is None else min(n_frontier, remaining_cap)
-            )
-            nparts = max(
-                1,
-                min(self.n_partitions, math.ceil(fetch_ub / self.rows_per_fetch_task)),
-            )
-            # hash- rather than round-robin-repartition: keyless repartition
-            # first pays a local sort of its input for retry determinism
-            # (SPARK-23207); hashing by url is deterministic without it and
-            # spreads uniformly-costed fetches evenly
-            pages = (
-                fetch.repartition(nparts, "url")
-                .mapInArrow(make_fetch_render_arrow(self.cfg), PAGE_SCHEMA)
-                .withColumn("part_id", F.spark_partition_id())
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-
-            images = pages.select(
-                F.col("url").alias("image_id"),
-                "bytes", "w", "h", "fmt", "caption", "phash",
-            )
-            self.wh.overwrite_partition("images", w, images)  # job 1 (materializes)
-            n_fetched = rows("images", w)
-            tick('job_images_udf')
-            if n_fetched == 0:  # budget can never defer ALL rows; 0 = done
+            with phase("job_images_udf"):
+                plan = self._plan_fetch(w, cache)
+                fetched = self._fetch_render(w, plan, cache) if plan else None
+            if not fetched:
                 return None
-
-            # ---- edges (A4) + discovery candidates.  The fetch kernel
-            # already canonicalized every link, so this is JVM only:
-            # resolved (no image bytes) is the cached frame both edges and
-            # candidates derive from.  It reads the PAGES cache, not the
-            # fetch_log file: the cache is columnar, so projecting (url,
-            # depth, seq, dsts) never deserializes the image-bytes column.
-            resolved = (
-                pages.select(
-                    "url", "depth", "seq",
-                    F.posexplode("dsts").alias("pos", "dst"),
-                )
-                .filter(F.col("dst").rlike(HTTP_RE))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            edges = resolved.select(F.col("url").alias("src"), "dst")
-            # jobs 2+4 both depend only on the pages cache (materialized by
-            # job 1) and write different tables: run them concurrently so the
-            # smaller write hides inside the larger (guide §2.6).  fetch_log
-            # carries the packed links for downstream/export consumers.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as _pool:
-                _f_log = _pool.submit(
-                    self.wh.overwrite_partition,
-                    "fetch_log",
-                    w,
-                    pages.select("url", "host", "depth", "seq", "part_id", "links"),
-                )
-                _f_edges = _pool.submit(
-                    self.wh.overwrite_partition, "edges", w, edges
-                )
-                _f_log.result()
-                _f_edges.result()  # job 4 (materializes resolved)
-            pages.unpersist()  # resolved is materialized; bytes leave memory
-            # per-partition lineage: fetch_log is written straight from the
-            # pages cache (no exchange), so each row group holds one part_id
-            part_counts = {
-                str(k): v for k, v in rows("fetch_log", w, by="part_id").items()
-            }
-            n_links = rows("edges", w)
-            tick('job_edges')
-
-            # child seq = parent lineage + one hex digit (crawl_semantics rule
-            # 1: string lineage never overflows, unlike seq*16+pos on int64)
-            cand = first_wins(
-                resolved.select(
-                    F.col("dst").alias("url"),
-                    F.regexp_extract("dst", HOST_RE, 1).alias("host"),
-                    (F.col("depth") + 1).cast("int").alias("depth"),
-                    F.concat(
-                        F.col("seq"), F.lower(F.conv(F.col("pos"), 10, 16))
-                    ).alias("seq"),
-                )
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-
-            seen_add, _ = self._admit(cand, self._read_seen(w), cand_hint=n_links)
-            tick('admit_plan')
-            # rebalance before the partitioned write: without it every write
-            # task emits one tiny file per shard it holds (tasks x shards
-            # fragments per wave — 2,865 seen files by wave 6 at bench tier,
-            # measured); AQE sizes the rebalanced partitions, so files track
-            # data volume at any scale (guide §6 small-files).
-            self.wh.overwrite_partition(  # job 5
-                "seen", w + 1, seen_add.hint("rebalance", "shard"),
-                partition_by=SEEN_PARTITION_BY,
-            )
-            n_new = rows("seen", w + 1)
-            tick('job_seen')
-
-            # frontier additions come FROM the written seen partition — the
-            # admit chain (bloom prefilter + anti-join) runs exactly once.
-            # A zero-addition wave writes a file-less partition dir (nothing
-            # to infer a schema from), so substitute an explicit-schema empty
-            # frame — downstream consumers are all by-name.
-            added = (
-                self.wh.read(spark, "seen", wave=w + 1)
-                if n_new > 0
-                else spark.createDataFrame([], SEEN_READ_SCHEMA)
-            )
-            frontier_add = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
-            # rebalance: the union otherwise writes one file per upstream
-            # cached partition (~50 tiny files/wave)
-            self.wh.overwrite_partition(  # job 6
-                "frontier", w + 1,
-                deferred.unionByName(frontier_add).hint("rebalance"),
-            )
-            n_frontier_next = rows("frontier", w + 1)
-            n_deferred = n_frontier - n_fetched
-            # frontier(w+1) = deferred ∪ unblocked additions; deferred = frontier − fetched
-            n_blocked = n_new - (n_frontier_next - n_deferred)
-            tick('job_frontier')
-            self._update_bloom(  # job 7 (driver fold, or distributed build)
-                added, wave_dir=self.wh.part_dir("seen", w + 1), n_rows=n_new
-            )
-            tick('job_bloom')
-
-            compacted_at = None
-            if self.seen_compact_every and (w + 1) % self.seen_compact_every == 0:
-                # fold waves 0..w+1 (newest snapshot + deltas) into one
-                # shard-partitioned snapshot; amortized one extra seen
-                # read+write per seen_compact_every waves
-                self.wh.overwrite_partition(
-                    "seen_compact",
-                    w + 1,
-                    self._read_seen(w + 1).hint("rebalance", "shard"),
-                    partition_by=SEEN_PARTITION_BY,
-                )
-                compacted_at = w + 1
-            tick('job_compact')
-
-            wall_ms = int((time.monotonic() - t0) * 1000)
+            pages, n_fetched = fetched
+            with phase("job_edges"):
+                resolved, n_links, partitions = self._links(w, pages, cache)
+            with phase("admit_plan"):
+                seen_add, n_scanned = self._admit_links(w, resolved, n_links, cache)
+            with phase("job_seen"):
+                n_new = self._write_seen(w + 1, seen_add)
+            with phase("job_frontier"):
+                added, n_next = self._write_frontier(w + 1, n_new, plan.deferred)
+            with phase("job_bloom"):
+                self._update_bloom(added, self.wh.part_dir("seen", w + 1), n_new)
+            with phase("job_compact"):
+                compacted_at = self._compact(w + 1)
+            n_deferred = plan.n_frontier - n_fetched
             stats = {
                 "wave": w,
-                "n_frontier": n_frontier,
+                "n_frontier": plan.n_frontier,
                 "n_fetched": n_fetched,
                 "n_deferred": n_deferred,
                 "n_links": n_links,
                 "n_new": n_new,
-                "n_robots_blocked": n_blocked,
-                "n_frontier_next": n_frontier_next,
-                "n_total_fetched": total_before + n_fetched,
-                "n_seen_shards_scanned": self._n_seen_shards_scanned,
+                # frontier(w+1) = deferred ∪ unblocked additions
+                "n_robots_blocked": n_new - (n_next - n_deferred),
+                "n_frontier_next": n_next,
+                "n_total_fetched": plan.n_total_before + n_fetched,
+                "n_seen_shards_scanned": n_scanned,
                 "seen_compacted_at": compacted_at,
-                "wall_ms": wall_ms,
-                "partitions": part_counts,
+                "wall_ms": int((time.monotonic() - t0) * 1000),
+                "partitions": partitions,
             }
             stats = {k: v for k, v in stats.items() if v is not None}
-            metrics_pdf = pd.DataFrame(
-                [{k: v for k, v in stats.items() if k != "partitions"}]
-            )
-            # one metrics row: driver-side parquet write (no Spark job)
-            self.wh.overwrite_partition_local("wave_metrics", w, metrics_pdf)
-            self.wh.commit(w + 1, {"kind": "wave", **stats})
-            tick('job_metrics_commit')
-            if self.snapshot_keep:
-                self.wh.expire_snapshots(self.snapshot_keep)
+            with phase("job_metrics_commit"):
+                self._write_metrics(w, stats)
+                self._commit(w + 1, {"kind": "wave", **stats})
         finally:
-            # every exit path (commit, early return, error) releases the
-            # wave's caches
-            for df in (flagged, pages, resolved, cand, *self._wave_cache):
-                if df is not None:
+            with phase("cleanup"):
+                for df in cache:
                     df.unpersist()
-            self._wave_cache.clear()
-        tick("cleanup")
-        self.phase_times.append(_prof)
+            self.spark.sparkContext._jsc.clearJobGroup()
+        self.phase_times.append(times)
         return stats
 
     def run(self, max_waves: int, fresh: bool = True) -> list[dict]:

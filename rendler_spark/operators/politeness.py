@@ -36,9 +36,12 @@ def budget_flagged(
     url_col: str = "url",
     n_salt: int = 8,
 ) -> DataFrame:
-    """Single-output variant: df's rows (minus budget helper cols) plus a
-    boolean ``_fetch`` flag.  The engine persists this frame once and
-    filters it twice — one window computation per wave, not three."""
+    """df's rows (minus budget helper cols) plus a boolean ``_fetch``
+    flag: True on each host's top-budget rows in ``order_cols`` order,
+    False on the deferred rest.  The engine persists this frame once and
+    filters it twice — one window computation per wave, not three;
+    ``.filter("_fetch")`` alone prunes the deferred branch from the
+    plan (its flag is the literal False)."""
     order = [F.col(c) for c in order_cols]
     keep = [c for c in df.columns if c not in (budget_col, "crawl_delay")]
 
@@ -60,30 +63,3 @@ def budget_flagged(
     )
     return part2.unionByName(over1)
 
-
-def budgeted_topk(
-    df: DataFrame,
-    host_col: str = "host",
-    order_cols: tuple[str, ...] = ("depth", "seq"),
-    budget_col: str = "eff_budget",
-    url_col: str = "url",
-    n_salt: int = 8,
-) -> tuple[DataFrame, DataFrame]:
-    """Split df into (fetch, deferred): fetch = per-host top-budget rows in
-    (depth, seq) order; deferred = everything else, columns unchanged."""
-    order = [F.col(c) for c in order_cols]
-    helper = ["_salt", "_r1", "_r2"]
-
-    d1 = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salt)))
-    w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
-    d1 = d1.withColumn("_r1", F.row_number().over(w1))
-
-    survivors = d1.filter(F.col("_r1") <= F.col(budget_col))
-    deferred_1 = d1.filter(F.col("_r1") > F.col(budget_col)).drop("_salt", "_r1")
-
-    w2 = Window.partitionBy(host_col).orderBy(*order)
-    d2 = survivors.withColumn("_r2", F.row_number().over(w2))
-    fetch = d2.filter(F.col("_r2") <= F.col(budget_col)).drop(*helper)
-    deferred_2 = d2.filter(F.col("_r2") > F.col(budget_col)).drop(*helper)
-
-    return fetch, deferred_1.unionByName(deferred_2)

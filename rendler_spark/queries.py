@@ -86,8 +86,8 @@ QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 #: the bench.py headline set (bench.py is frozen and keeps its own copy;
-#: bench_extra.py and tools/dump_plans.py share THIS one so A/B timings
-#: and committed plans always cover the same queries)
+#: perfbench's queries workload and tools/dump_plans.py share THIS one so
+#: timings and committed plans always cover the same queries)
 HEADLINE = [
     "q_groupby_agg", "q_shuffle_join", "q_topk_per_group", "q_anti_join",
     "q_order_by", "q_count_distinct", "q_tumbling_window", "q_session_gap",
@@ -1462,13 +1462,13 @@ def q_corpus_mix(spark, sf):
     values — a naive `row_number over (partition by lang_pred)` puts an
     entire language into one window task at corpus scale.  So it rides
     the politeness operator's salted two-phase exact top-K
-    (operators/politeness.budgeted_topk): phase 1 ranks within
+    (operators/politeness.budget_flagged): phase 1 ranks within
     (lang, salt) — parallel even for one giant language — phase 2 ranks
     the <= n_salt*quota survivors.  Identical rows to the naive window
     (the oracle IS the naive window in SQL)."""
     from rendler_spark.functions import text as textfns
     from rendler_spark.functions.sampling import det_mix
-    from rendler_spark.operators.politeness import budgeted_topk
+    from rendler_spark.operators.politeness import budget_flagged
 
     d = t(spark, sf, "documents").select(
         "doc_id", textfns.lang_guess(F.col("text")), det_mix("doc_id").alias("mix")
@@ -1478,13 +1478,13 @@ def q_corpus_mix(spark, sf):
         .when(F.col("lang_pred") == "tech", 50)
         .otherwise(25)
     )
-    picked, _rest = budgeted_topk(
+    picked = budget_flagged(
         d.withColumn("quota", quota),
         host_col="lang_pred",
         order_cols=("mix", "doc_id"),
         budget_col="quota",
         url_col="doc_id",
-    )
+    ).filter("_fetch")
     return picked.select("doc_id", "lang_pred")
 
 
@@ -2286,7 +2286,7 @@ def q_corpus_e2e(spark, sf):
     q_corpus_e2e_full adds the non-SQL LSH near-dup stage."""
     from rendler_spark.functions import text as textfns
     from rendler_spark.functions.sampling import det_mix, pack_sequences
-    from rendler_spark.operators.politeness import budgeted_topk
+    from rendler_spark.operators.politeness import budget_flagged
 
     d = t(spark, sf, "documents").select(
         "doc_id", "text", textfns.quality_score("text"), textfns.fingerprint("text")
@@ -2306,13 +2306,13 @@ def q_corpus_e2e(spark, sf):
         .when(F.col("lang_pred") == "tech", 50)
         .otherwise(25)
     )
-    picked, _rest = budgeted_topk(
+    picked = budget_flagged(
         langed.withColumn("quota", quota),
         host_col="lang_pred",
         order_cols=("mix", "doc_id"),
         budget_col="quota",
         url_col="doc_id",
-    )
+    ).filter("_fetch")
     toks = picked.select(
         "doc_id", "lang_pred", "quality",
         F.size(F.split("text", " ")).alias("n_tokens"),
@@ -2338,7 +2338,7 @@ def q_corpus_e2e_full(spark, sf):
     from rendler_spark.functions import text as textfns
     from rendler_spark.functions.sampling import det_mix, pack_sequences
     from rendler_spark.operators.components import dedup_clusters
-    from rendler_spark.operators.politeness import budgeted_topk
+    from rendler_spark.operators.politeness import budget_flagged
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
     corpus = docs.unionByName(
@@ -2388,13 +2388,13 @@ def q_corpus_e2e_full(spark, sf):
         .when(F.col("lang_pred") == "tech", 50)
         .otherwise(25)
     )
-    picked, _rest = budgeted_topk(
+    picked = budget_flagged(
         langed.withColumn("quota", quota),
         host_col="lang_pred",
         order_cols=("mix", "doc_id"),
         budget_col="quota",
         url_col="doc_id",
-    )
+    ).filter("_fetch")
     toks = picked.select(
         "doc_id", "lang_pred", "quality",
         F.size(F.split("text", " ")).alias("n_tokens"),

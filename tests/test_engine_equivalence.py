@@ -259,3 +259,27 @@ def test_zero_addition_wave_counts_and_exhaustion(spark, tmp_path):
         assert s["n_new"] == _rows(spark, eng, "seen", w + 1), w
         assert s["n_robots_blocked"] == _rows(spark, eng, "seen", w + 1, "blocked"), w
         assert s["n_frontier_next"] == _rows(spark, eng, "frontier", w + 1), w
+
+
+def test_wave_phases_time_and_name_their_jobs(spark, tmp_path):
+    """The wave runner times every phase into ``phase_times`` and runs
+    each phase's Spark jobs in the job group ``w<wave>/<phase>``; the
+    fetch_log and edges writes run on pool threads, which set the group
+    themselves.  The group is cleared when the wave ends."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = ("w1/job_images_udf", "w1/job_edges", "w1/job_seen")
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
+    eng = CrawlEngine(spark, CFG, str(tmp_path / "phases"))
+    assert len(eng.run(2)) == 2
+    phases = (
+        "job_images_udf", "job_edges", "admit_plan", "job_seen",
+        "job_frontier", "job_bloom", "job_compact", "job_metrics_commit",
+        "cleanup",
+    )
+    assert [tuple(p) for p in eng.phase_times] == [phases, phases]
+    assert all(s >= 0 for p in eng.phase_times for s in p.values())
+    jobs = {g: set(tracker.getJobIdsForGroup(g)) - before[g] for g in groups}
+    assert all(jobs.values()), jobs
+    assert len(jobs["w1/job_edges"]) >= 2, jobs  # one write per pool thread
+    assert sc.getLocalProperty("spark.jobGroup.id") is None

@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
-from rendler_spark.operators.politeness import budget_flagged, budgeted_topk
+from rendler_spark.operators.politeness import budget_flagged
 
 
 def _frontier_pdf(seed=3, n=500, hosts=6):
@@ -43,12 +43,18 @@ def test_budget_flagged_exact_under_skew(spark):
         assert got | deferred == set(pdf["url"]) and not (got & deferred)
 
 
-def test_budgeted_topk_pair_api(spark):
+def test_budget_flagged_fetch_filter(spark):
+    """The registry's form, ``.filter("_fetch")``: exactly the top-K,
+    the deferred rows are the disjoint rest of the input, and Catalyst
+    drops the deferred branch (flag literal False) from the plan."""
     pdf = _frontier_pdf(seed=11)
-    df = spark.createDataFrame(pdf)
-    fetch, deferred = budgeted_topk(df, n_salt=8)
-    assert {r["url"] for r in fetch.collect()} == _naive_fetch(pdf)
-    assert fetch.count() + deferred.count() == len(pdf)
+    flagged = budget_flagged(spark.createDataFrame(pdf), n_salt=8)
+    fetch = flagged.filter("_fetch")
+    got = [r["url"] for r in fetch.collect()]
+    deferred = [r["url"] for r in flagged.filter("NOT _fetch").collect()]
+    assert set(got) == _naive_fetch(pdf)
+    assert sorted(got + deferred) == sorted(pdf["url"])
+    assert "Union" not in fetch._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_varying_budget_per_host(spark):
@@ -81,7 +87,8 @@ def test_mega_group_salt_bound_and_exactness(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    fetch, deferred = budgeted_topk(df, n_salt=n_salt)
+    flagged = budget_flagged(df, n_salt=n_salt)
+    fetch, deferred = flagged.filter("_fetch"), flagged.filter("NOT _fetch")
     got = sorted(r["url"] for r in fetch.collect())
     want = sorted(
         pdf.sort_values(["depth", "seq"]).head(budget)["url"]
@@ -114,10 +121,11 @@ from hypothesis import strategies as st  # noqa: E402
     hosts=st.integers(min_value=1, max_value=5),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
-def test_budgeted_topk_exact_property(spark, n, n_salt, budget, hosts, seed):
+def test_budget_flagged_exact_property(spark, n, n_salt, budget, hosts, seed):
     """Property form of the exactness claim: for ANY frontier shape
     (row count, salt fan-out, budget, host spread, ordering), the salted
-    two-phase result equals the naive per-host top-budget."""
+    two-phase result equals the naive per-host top-budget, and fetch and
+    deferred split the input with nothing lost or repeated."""
     rng = np.random.default_rng(seed)
     h = rng.integers(0, hosts, n)
     pdf = pd.DataFrame(
@@ -130,5 +138,6 @@ def test_budgeted_topk_exact_property(spark, n, n_salt, budget, hosts, seed):
         }
     )
     df = spark.createDataFrame(pdf)
-    fetch, _deferred = budgeted_topk(df, n_salt=n_salt)
-    assert {r["url"] for r in fetch.collect()} == _naive_fetch(pdf)
+    rows = [(r["url"], r["_fetch"]) for r in budget_flagged(df, n_salt=n_salt).collect()]
+    assert {u for u, fetch in rows if fetch} == _naive_fetch(pdf)
+    assert sorted(u for u, _ in rows) == sorted(pdf["url"])

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for named queries to plans/r06/<q>_<tag>.txt.
 
-Usage: python tools/dump_plans.py <tag> [query ...]
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS.
+Usage: python tools/dump_plans.py <tag> [query ...]   (default: HEADLINE)
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01, the committed
+testdata), SPARK_GRAFT_CPUS (default: the CPUs this process may use).
 """
 
 from __future__ import annotations
@@ -10,17 +11,15 @@ from __future__ import annotations
 import os
 import sys
 
-from rendler_spark.queries import QUERIES
+from rendler_spark.queries import HEADLINE, QUERIES
 from rendler_spark.session import get_spark
-
-from rendler_spark.queries import HEADLINE as DEFAULT  # noqa: E402
 
 
 def main() -> None:
     tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    names = sys.argv[2:] or HEADLINE
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     os.makedirs("plans/r06", exist_ok=True)
     spark = get_spark(f"local[{cpus}]", "rendler_plans", shuffle_partitions=cpus)
     for name in names:
