@@ -12,11 +12,13 @@ DataFrames (BASELINE.json:L6 "Each crawl wave is a batch iteration"):
       │     fetch set ─────────────┐   deferred rows → frontier(w+1)
       ├─ mapInArrow fetch+render UDF (Arrow batches)    (A2, H1-H4)
       │     → images rows (input_hint schema) + packed links
-      │       + canonical links (the wave's only Python stage)
+      │       + canonical links + each link's maybe-seen flag
+      │       (Bloom-shard probe) — the wave's only Python stage
       ├─ posexplode canonical links → http(s) filter    (JVM)
       │     → edges(w)
       ├─ first-wins dedup (min(depth,seq) per URL)      (D3) — 1 shuffle
-      ├─ Bloom-shard prefilter → exact left-anti join   (C1, C2, D6)
+      ├─ split on the flag: sure-new ∪ maybe-seen       (C1, C2, D6)
+      │     LEFT ANTI seen (the exact authority)
       ├─ robots gate → seen additions (blocked flagged) (B3)
       └─ commit wave manifest: images/edges/seen/frontier(w+1)/metrics
 
@@ -28,7 +30,7 @@ so a Spark event log ties each job to its wave and phase:
     job_images_udf      plan-fetch (budget split, max_render_tasks cap),
                         fetch-render, images(w) write
     job_edges           links: resolved, fetch_log(w) + edges(w) writes
-    admit_plan          admit: candidates, first-wins, seen prefilter plan
+    admit_plan          admit: candidates, first-wins, shard prune, plan
     job_seen            seen(w+1) write (runs the admission chain)
     job_frontier        frontier(w+1) = deferred ∪ unblocked seen(w+1)
     job_bloom           fold seen(w+1) into the Bloom/cuckoo state
@@ -61,10 +63,15 @@ Scale notes (designed for 10^10-URL frontiers, tested on local[32]):
   overwhelmingly-new candidate mass AROUND the anti-join (SURVEY.md §4.1).
 * the prefilter's shard blobs live on the driver (bits-sized, never
   row-sized) and are broadcast to every executor (right while total
-  blob bytes << executor memory); ``bloom_mode="off"`` drops the
-  prefilter and leaves the pure exact anti-join.  ``filter_kind`` picks
+  blob bytes << executor memory), where the fetch kernel probes every
+  link it emits (``hashing.xxhash64_utf8`` ≡ Spark's ``xxhash64``), so
+  admission is JVM-only; ``bloom_mode="off"`` drops the prefilter and
+  leaves the pure exact anti-join.  ``filter_kind`` picks
   Bloom bits or a cuckoo table (deletion support) behind the same
   contract (operators/seenfilter.py).
+* seen and frontier reads pass their known schemas
+  (``SEEN_READ_SCHEMA``, ``FRONTIER_READ_SCHEMA``): no read starts a
+  schema-inference job over the parquet footers.
 * ``seq`` lineage is a hex string (crawl_semantics rule 1) — exact BFS
   order at any crawl depth; the int64 encoding wrapped at depth ~14.
 * ``max_render_tasks`` (rule 7) is the reference's global render cutoff:
@@ -87,12 +94,12 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import BooleanType
 from pyspark.storagelevel import StorageLevel
 
 from rendler_spark import codecs, synthweb, urlnorm
 from rendler_spark.crawl_semantics import N_SHARDS, SEQ_BASE, seed_seq
 from rendler_spark.functions import links as linkfns
+from rendler_spark.hashing import xxhash64_utf8
 from rendler_spark.operators import seenfilter
 from rendler_spark.operators.politeness import budget_flagged
 from rendler_spark.operators.robots import (
@@ -102,20 +109,24 @@ from rendler_spark.sources.tables import Warehouse
 
 HOST_RE = r"^https?://([^/?#]*)"
 FRONTIER_COLS = ("url", "host", "depth", "seq")
-#: schema of a seen wave partition as read back (incl. partition cols)
+#: the schemas of a frontier and a seen wave partition as read back,
+#: partition cols last in path order: every engine read passes one, so
+#: Spark runs no schema-inference job (Warehouse.read)
+FRONTIER_READ_SCHEMA = "url string, host string, depth int, seq string, wave int"
 SEEN_READ_SCHEMA = (
     "url_hash bigint, url string, host string, depth int, seq string, "
-    "blocked boolean, shard int, wave int"
+    "blocked boolean, wave int, shard int"
 )
 #: the seen table (and its compacted snapshots) is Hive-sub-partitioned by
 #: shard, so the anti-join's seen-side scan can be pruned to the shards
 #: the maybe-seen candidates name
 SEEN_PARTITION_BY = ["shard"]
 #: ``links`` is the page's raw hrefs, SEP-packed (fetch_log keeps them);
-#: ``dsts`` is the same hrefs canonicalized, position for position
+#: ``dsts`` is the same hrefs canonicalized, position for position;
+#: ``maybe`` is each dst's seen-prefilter verdict, position for position
 PAGE_SCHEMA = (
     "url string, host string, depth int, seq string, links string, "
-    "dsts array<string>, "
+    "dsts array<string>, maybe array<boolean>, "
     "bytes binary, w int, h int, fmt string, caption string, phash bigint"
 )
 #: a canonical link the crawl follows (edges, discovery candidates)
@@ -166,13 +177,30 @@ def _render_batch(cfg: synthweb.WebConfig, urls: pd.Series) -> dict:
     }
 
 
-def make_fetch_render_arrow(cfg: synthweb.WebConfig):
+def make_fetch_render_arrow(cfg: synthweb.WebConfig, probe: tuple | None = None):
     """mapInArrow wrapper (SURVEY §2J): the pass-through columns
     (url/host/depth/seq) are re-emitted as the INPUT RecordBatch's own
     arrays — zero copy, no pandas object-column round trip — and the
     produced columns (image bytes etc.) go straight into Arrow arrays.
-    Shared by the wave loop and the streaming skin."""
+    Shared by the wave loop and the streaming skin.
+
+    ``probe`` = (broadcast shard blobs, filter kind, filter params,
+    n_shards): every canonical link is probed against the seen
+    prefilter here, in the same Python pass (C1, D6), and ``maybe``
+    holds the verdicts on the ``dsts`` offsets.  Without a probe every
+    link is maybe-seen, so admission checks them all exactly."""
     import pyarrow as pa
+
+    def flags(dsts: "pa.ListArray") -> "pa.ListArray":
+        values = dsts.flatten()
+        if probe is None:
+            maybe = np.ones(len(values), dtype=bool)
+        else:
+            bc, kind, params, n_shards = probe
+            maybe = seenfilter.contains_sharded(
+                kind, bc.value, xxhash64_utf8(values), n_shards, params
+            )
+        return pa.ListArray.from_arrays(dsts.offsets, pa.array(maybe, pa.bool_()))
 
     def fetch_render(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for rb in batches:
@@ -187,6 +215,7 @@ def make_fetch_render_arrow(cfg: synthweb.WebConfig):
                 rb.column(rb.schema.get_field_index("seq")),
                 pa.array(out["links"], type=pa.string()),
                 out["dsts"],
+                flags(out["dsts"]),
                 pa.array(out["bytes"], type=pa.binary()),
                 pa.array(out["w"], type=pa.int32()),
                 pa.array(out["h"], type=pa.int32()),
@@ -195,8 +224,8 @@ def make_fetch_render_arrow(cfg: synthweb.WebConfig):
                 pa.array(out["phash"], type=pa.int64()),
             ]
             names = [
-                "url", "host", "depth", "seq", "links", "dsts", "bytes",
-                "w", "h", "fmt", "caption", "phash",
+                "url", "host", "depth", "seq", "links", "dsts", "maybe",
+                "bytes", "w", "h", "fmt", "caption", "phash",
             ]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
@@ -217,15 +246,22 @@ def make_filter_builder(kind: str, params: dict):
 
 def first_wins(df: DataFrame) -> DataFrame:
     """D3: deterministic first-discovery dedup — min (depth, seq) per URL
-    (crawl_semantics rule 4); host rides along (constant per URL)."""
+    (crawl_semantics rule 4); host rides along (constant per URL).  Any
+    other column (the kernel's ``_maybe`` prefilter verdict) is a
+    function of the URL too, so every duplicate agrees: kept as its max."""
+    extra = [c for c in df.columns if c not in FRONTIER_COLS]
     return (
         df.groupBy("url")
-        .agg(F.min(F.struct("depth", "seq", "host")).alias("m"))
+        .agg(
+            F.min(F.struct("depth", "seq", "host")).alias("m"),
+            *[F.max(c).alias(c) for c in extra],
+        )
         .select(
             "url",
             F.col("m.host").alias("host"),
             F.col("m.depth").alias("depth"),
             F.col("m.seq").alias("seq"),
+            *extra,
         )
     )
 
@@ -357,19 +393,6 @@ class CrawlEngine:
             self._bc.destroy()
         self._bc = self.spark.sparkContext.broadcast(dict(self._shard_blobs))
 
-    def _maybe_seen_udf(self):
-        bc, kind, params, ns = self._bc, self.filter_kind, self.filter_params, self.n_shards
-
-        @F.pandas_udf(BooleanType())
-        def maybe_seen(h: pd.Series) -> pd.Series:
-            return pd.Series(
-                seenfilter.contains_sharded(
-                    kind, bc.value, h.to_numpy(np.int64), ns, params
-                )
-            )
-
-        return maybe_seen
-
     # ----------------------------------------------------- admission
 
     def _admit(
@@ -377,14 +400,19 @@ class CrawlEngine:
         candidates: DataFrame,
         seen: DataFrame | None,
         *,
-        cache: list[DataFrame],
         cand_hint: int | None = None,
     ) -> tuple[DataFrame, int | None]:
         """Dedup candidates against the seen set (C1/C2), gate by robots
         (B3); returns (seen_additions, seen shards scanned), the count None
-        when no prefilter ran.  A frame it persists goes on ``cache``.
+        when no prefilter ran.  No Python runs here: the fetch kernel
+        already probed the prefilter for every link.
 
-        candidates: (url, host, depth, seq), already first-wins-deduped.
+        candidates: (url, host, depth, seq, _maybe), first-wins-deduped
+        and cached; ``_maybe`` is the kernel's prefilter verdict (absent
+        for the seeds, which have no seen set to check).  Sure-new rows
+        (``_maybe`` false) skip the exact anti-join; maybe-seen rows go
+        through it, so it stays authoritative and the filter's zero
+        false negatives keep the result exact.
         ``cand_hint``: upper bound on the candidate count (the wave's link
         observation).  When it is large relative to ``n_shards`` the
         maybe-seen candidates hit every shard with near-certainty, so the
@@ -398,14 +426,7 @@ class CrawlEngine:
         )
         n_scanned = None
         if seen is not None:
-            flagged = None
-            if self.bloom_mode == "broadcast" and self._bc is not None:
-                # the prefilter verdict is consumed three times (sure-new
-                # branch, anti-join branch, shard-prune collect): cache it
-                flagged = cand.withColumn(
-                    "_maybe", self._maybe_seen_udf()(F.col("url_hash"))
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                cache.append(flagged)
+            if self._bc is not None:
                 # prune the seen-side SCAN to shards that can possibly
                 # match: with the seen table Hive-sub-partitioned by shard
                 # this turns the per-wave re-scan of the whole seen set
@@ -419,7 +440,7 @@ class CrawlEngine:
                 else:
                     shards = sorted(
                         int(r["shard"])
-                        for r in flagged.filter(F.col("_maybe"))
+                        for r in cand.filter(F.col("_maybe"))
                         .select("shard")
                         .distinct()
                         .collect()
@@ -434,9 +455,9 @@ class CrawlEngine:
             # first_wins groupBy, so Catalyst reuses that partitioning and
             # only the SEEN side shuffles
             seen_keys = seen.select("url")
-            if flagged is not None:
-                sure_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-                need_check = flagged.filter(F.col("_maybe")).drop("_maybe")
+            if self._bc is not None:
+                sure_new = cand.filter(~F.col("_maybe"))
+                need_check = cand.filter(F.col("_maybe"))
                 # exact anti-join is authoritative; bloom only shrinks it
                 checked = need_check.join(seen_keys, "url", "left_anti")
                 new = sure_new.unionByName(checked)
@@ -470,10 +491,9 @@ class CrawlEngine:
             .withColumn("host", F.regexp_extract("url", HOST_RE, 1))
             .filter(F.col("url").rlike(HTTP_RE))
         )
-        # no seen set yet: nothing to prefilter, so nothing is cached
-        seen_add, _ = self._admit(first_wins(df), None, cache=[])
+        seen_add, _ = self._admit(first_wins(df), None)
         n_new = self._write_seen(0, seen_add)
-        added, n_frontier = self._write_frontier(0, n_new, None)
+        added, n_frontier = self._write_frontier(0, None)
         self._update_bloom(added, self.wh.part_dir("seen", 0), n_new)
         self._commit(0, {
             "kind": "init",
@@ -498,13 +518,13 @@ class CrawlEngine:
             if self.seen_compact_every
             else None
         )
+        read = partial(self.wh.read, self.spark, schema=SEEN_READ_SCHEMA)
         if c is None:
-            return self.wh.read(self.spark, "seen", upto=upto).drop("wave")
-        base = self.wh.read(self.spark, "seen_compact", wave=c).drop("wave")
+            return read("seen", upto=upto).drop("wave")
+        base = read("seen_compact", wave=c).drop("wave")
         if c >= upto:
             return base
-        delta = self.wh.read(self.spark, "seen", upto=upto, start=c + 1).drop("wave")
-        return base.unionByName(delta)
+        return base.unionByName(read("seen", upto=upto, start=c + 1).drop("wave"))
 
     # ----------------------------------------------------- wave phases
 
@@ -532,7 +552,7 @@ class CrawlEngine:
         if n_frontier == 0 or (cap is not None and cap <= 0):
             return None
         frontier = (
-            self.wh.read(self.spark, "frontier", wave=w)
+            self.wh.read(self.spark, "frontier", wave=w, schema=FRONTIER_READ_SCHEMA)
             .drop("wave")
             .join(F.broadcast(self.robots.select("host", "crawl_delay")), "host", "left")
             .withColumn("eff_budget", effective_budget_col(self.budget))
@@ -573,14 +593,18 @@ class CrawlEngine:
         """fetch-render: the Arrow kernel over the fetch set, cached as
         ``pages``; writing images(w) materializes it.  Returns (pages,
         rows fetched), or None when nothing was fetched (the budget can
-        never defer ALL rows, so 0 means done)."""
+        never defer ALL rows, so 0 means done).  The kernel probes every
+        link against the prefilter state of the last fold: seen(<=w)."""
         # hash- rather than round-robin-repartition: keyless repartition
         # first pays a local sort of its input for retry determinism
         # (SPARK-23207); hashing by url is deterministic without it and
         # spreads uniformly-costed fetches evenly
+        probe = None if self._bc is None else (
+            self._bc, self.filter_kind, self.filter_params, self.n_shards
+        )
         pages = (
             plan.fetch.repartition(plan.n_tasks, "url")
-            .mapInArrow(make_fetch_render_arrow(self.cfg), PAGE_SCHEMA)
+            .mapInArrow(make_fetch_render_arrow(self.cfg, probe), PAGE_SCHEMA)
             .withColumn("part_id", F.spark_partition_id())
         ).persist(StorageLevel.MEMORY_AND_DISK)
         cache.append(pages)
@@ -597,19 +621,24 @@ class CrawlEngine:
     ) -> tuple[DataFrame, int, dict[str, int]]:
         """links: every canonical http(s) link of the wave's pages as the
         cached ``resolved`` frame (JVM only: the fetch kernel already
-        canonicalized them), written as edges(w) next to fetch_log(w).
+        canonicalized and probed them; ``_maybe`` is each link's prefilter
+        verdict), written as edges(w) next to fetch_log(w).
         Releases ``pages`` once ``resolved`` is materialized, so image
         bytes leave memory before admission.  Returns (resolved, link
         count, per-partition lineage)."""
         # resolved reads the PAGES cache, not the fetch_log file: the cache
-        # is columnar, so projecting (url, depth, seq, dsts) never
+        # is columnar, so projecting (url, depth, seq, dsts, maybe) never
         # deserializes the image-bytes column
         resolved = (
             pages.select(
-                "url", "depth", "seq",
+                "url", "depth", "seq", "maybe",
                 F.posexplode("dsts").alias("pos", "dst"),
             )
             .filter(F.col("dst").rlike(HTTP_RE))
+            .select(
+                "url", "depth", "seq", "pos", "dst",
+                F.col("maybe")[F.col("pos")].alias("_maybe"),
+            )
         ).persist(StorageLevel.MEMORY_AND_DISK)
         cache.append(resolved)
         writes = {
@@ -654,10 +683,11 @@ class CrawlEngine:
                 F.concat(
                     F.col("seq"), F.lower(F.conv(F.col("pos"), 10, 16))
                 ).alias("seq"),
+                "_maybe",
             )
         ).persist(StorageLevel.MEMORY_AND_DISK)
         cache.append(cand)
-        return self._admit(cand, self._read_seen(w), cache=cache, cand_hint=n_links)
+        return self._admit(cand, self._read_seen(w), cand_hint=n_links)
 
     def _write_seen(self, v: int, seen_add: DataFrame) -> int:
         """seen-write: the admitted rows as seen(v); returns their count."""
@@ -673,20 +703,15 @@ class CrawlEngine:
         return self.wh.partition_rows("seen", v)
 
     def _write_frontier(
-        self, v: int, n_new: int, deferred: DataFrame | None
+        self, v: int, deferred: DataFrame | None
     ) -> tuple[DataFrame, int]:
         """frontier-write: frontier(v) = ``deferred`` ∪ the unblocked rows
         of seen(v), read back from the written partition so the admission
         chain runs exactly once.  Returns (seen(v) as read, frontier(v)'s
         row count)."""
-        # A zero-addition wave writes a file-less partition dir (nothing
-        # to infer a schema from), so substitute an explicit-schema empty
-        # frame — downstream consumers are all by-name.
-        added = (
-            self.wh.read(self.spark, "seen", wave=v)
-            if n_new > 0
-            else self.spark.createDataFrame([], SEEN_READ_SCHEMA)
-        )
+        # the known schema also reads a zero-addition wave's file-less
+        # partition dir, as an empty frame
+        added = self.wh.read(self.spark, "seen", wave=v, schema=SEEN_READ_SCHEMA)
         rows = added.filter(~F.col("blocked")).select(*FRONTIER_COLS)
         if deferred is not None:
             rows = deferred.unionByName(rows)
@@ -748,7 +773,7 @@ class CrawlEngine:
             with phase("job_seen"):
                 n_new = self._write_seen(w + 1, seen_add)
             with phase("job_frontier"):
-                added, n_next = self._write_frontier(w + 1, n_new, plan.deferred)
+                added, n_next = self._write_frontier(w + 1, plan.deferred)
             with phase("job_bloom"):
                 self._update_bloom(added, self.wh.part_dir("seen", w + 1), n_new)
             with phase("job_compact"):

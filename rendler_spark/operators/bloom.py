@@ -18,8 +18,10 @@ SURVEY.md §0.4), so bits live in numpy arrays:
   ORs per-wave increments into its running shard dict (bits-sized, never
   row-sized).
 * probe: shard dict broadcast (the "broadcast" arm of BASELINE.json:L6
-  "broadcast or shuffle-hash join by hash prefix"); a scalar pandas UDF
-  tests candidate hashes vectorized per shard present in the batch.
+  "broadcast or shuffle-hash join by hash prefix"); the fetch kernel
+  (engine.make_fetch_render_arrow) hashes each canonical link with
+  ``hashing.xxhash64_utf8`` and tests the hashes vectorized per shard
+  present in the batch.
 
 Membership hashing is double hashing over the 64-bit xxhash64 of the
 canonical URL: position_i = (h1 + i*h2) mod m (Kirsch–Mitzenmacher).

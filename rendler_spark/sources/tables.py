@@ -122,11 +122,17 @@ class Warehouse:
         wave: int | None = None,
         upto: int | None = None,
         start: int = 0,
+        schema: str | None = None,
     ) -> DataFrame:
         """Read a table; ``wave=`` one partition, ``upto=`` partitions
         start..upto (explicit dir list -> partition pruning by
         construction).  The Hive-style dir names surface ``wave`` (and any
-        sub-partition key such as ``shard``) as partition columns."""
+        sub-partition key such as ``shard``) as partition columns.
+
+        ``schema`` (DDL, partition columns included) is the table's known
+        schema: Spark then skips the job that infers it from the parquet
+        footers, and a file-less partition dir (a zero-row partitioned
+        write) reads as an empty frame instead of failing."""
         base = self.table_dir(table)
         if wave is not None:
             dirs = [self.part_dir(table, wave)]
@@ -138,6 +144,8 @@ class Warehouse:
                 d for d in base.iterdir() if d.is_dir() and d.name.startswith("wave=")
             )
         reader = spark.read.option("basePath", str(base))
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(*[str(d) for d in dirs])
 
     def partition_rows(self, table: str, wave: int, by: str | None = None):

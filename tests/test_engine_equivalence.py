@@ -138,15 +138,17 @@ def _explain(spark, df) -> str:
 @pytest.fixture(scope="module")
 def multipart(spark, tmp_path_factory):
     """The t1 crawl with one URL per fetch task, so waves fetch on several
-    partitions; records the candidate plan each wave hands to admission."""
+    partitions; records, per admission, the plan of the candidates it is
+    handed and of the seen additions it returns (the seen-write input)."""
     wh = str(tmp_path_factory.mktemp("wh") / "t1_multipart")
     eng = CrawlEngine(spark, CFG, wh, rows_per_fetch_task=1)
     plans = []
     admit = eng._admit
 
     def recording_admit(candidates, seen, **kw):
-        plans.append(_explain(spark, candidates))
-        return admit(candidates, seen, **kw)
+        seen_add, n_scanned = admit(candidates, seen, **kw)
+        plans.append((_explain(spark, candidates), _explain(spark, seen_add)))
+        return seen_add, n_scanned
 
     eng._admit = recording_admit
     stats = eng.run(WAVES)
@@ -170,14 +172,18 @@ def test_multi_partition_lineage(multipart, spark):
 
 
 def test_wave_candidate_plan_has_no_python(multipart):
-    """The fetch kernel is the wave's only Python stage: the candidate
-    sub-plan (links → canonical URLs → first-wins) holds no Python eval."""
+    """The fetch kernel is the wave's only Python stage: neither the
+    candidate sub-plan (links → canonical URLs → first-wins) nor the
+    admission plan the seen write runs (prefilter split, exact
+    anti-join, robots gate) holds a Python eval — the kernel already
+    probed the seen prefilter for every link."""
     _, _, plans = multipart
     assert len(plans) == WAVES + 1  # init + one per wave
-    for p in plans[1:]:
-        assert "MapInArrow" in p, p  # the plan shows the kernel's lineage
-    for p in plans:
-        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
+    for cand, _ in plans[1:]:
+        assert "MapInArrow" in cand, cand  # the plan shows the kernel's lineage
+    for cand, seen_add in plans:
+        for p in (cand, seen_add):
+            assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
 
 
 def test_max_render_tasks_cap(spark, tmp_path):

@@ -1,12 +1,21 @@
 """The fetch kernel's link step (``links.canonical_links``) ≡ urlnorm,
 per (page URL, href): same values at the same positions, so edges and
-the ``seq`` lineage digits do not depend on where canonicalization runs."""
+the ``seq`` lineage digits do not depend on where canonicalization runs.
+The kernel's prefilter verdicts (``maybe``) line up with those links."""
+
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from rendler_spark import synthweb, urlnorm
+from rendler_spark.crawl_semantics import N_SHARDS
+from rendler_spark.engine import FILTER_PARAMS, make_fetch_render_arrow
 from rendler_spark.functions import links as linkfns
+from rendler_spark.hashing import xxhash64_utf8
+from rendler_spark.operators import seenfilter
 
 SEP = linkfns.SEP
 
@@ -67,3 +76,57 @@ def test_canonical_links_index_and_empty_batch():
     assert got == [["http://a.test/x/p1", "http://a.test/p2"], ["http://b.test/p3"]]
     empty = pd.Series([], dtype=str)
     assert linkfns.canonical_links(empty, empty).to_pylist() == []
+
+
+def _page_batch(cfg: synthweb.WebConfig, n: int = 64) -> pa.RecordBatch:
+    """A fetch-kernel input batch: the first ``n`` pages of the web."""
+    hi = np.repeat(np.arange(cfg.n_hosts), 4)[:n]
+    pj = np.tile(np.arange(4), cfg.n_hosts)[:n]
+    urls = synthweb.page_url(cfg, hi, pj)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls, pa.string()),
+            pa.array(urls.str.extract(r"^https?://([^/]*)")[0], pa.string()),
+            pa.array(np.zeros(len(urls), np.int32), pa.int32()),
+            pa.array([f"{i:x}" for i in range(len(urls))], pa.string()),
+        ],
+        names=["url", "host", "depth", "seq"],
+    )
+
+
+def test_fetch_kernel_flags_every_link():
+    """The fetch kernel's ``maybe`` column is the seen-prefilter verdict of
+    each ``dsts`` entry, position for position; every link in the filter
+    is flagged (zero false negatives); without a probe every link is
+    maybe-seen and every other column is unchanged."""
+    cfg = synthweb.WebConfig()
+    rb = _page_batch(cfg)
+    [plain] = list(make_fetch_render_arrow(cfg)(iter([rb])))
+    dsts = plain.column("dsts")
+    known = [u for u in dsts.flatten().to_pylist() if u][::2]
+    hashes = xxhash64_utf8(known)
+    shard = np.mod(hashes, N_SHARDS)
+    blobs = {
+        int(s): seenfilter.build_blob("bloom", hashes[shard == s], FILTER_PARAMS)
+        for s in np.unique(shard)
+    }
+    probe = (SimpleNamespace(value=blobs), "bloom", FILTER_PARAMS, N_SHARDS)
+    [probed] = list(make_fetch_render_arrow(cfg, probe)(iter([rb])))
+
+    maybe = probed.column("maybe")
+    assert pc.list_value_length(maybe).equals(pc.list_value_length(dsts))
+    flat_dst = dsts.flatten().to_pylist()
+    flat_maybe = maybe.flatten().to_pylist()
+    want = seenfilter.contains_sharded(
+        "bloom", blobs, xxhash64_utf8(flat_dst), N_SHARDS, FILTER_PARAMS
+    )
+    assert flat_maybe == want.tolist()
+    known_set = set(known)
+    assert all(m for d, m in zip(flat_dst, flat_maybe) if d in known_set)
+    assert not all(flat_maybe)  # the filter does route some links around
+
+    assert all(plain.column("maybe").flatten().to_pylist())
+    assert pc.list_value_length(plain.column("maybe")).equals(pc.list_value_length(dsts))
+    for name in plain.schema.names:
+        if name != "maybe":
+            assert plain.column(name).equals(probed.column(name)), name

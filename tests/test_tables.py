@@ -43,6 +43,39 @@ def test_sub_partitioning(spark, wh):
     assert df.filter("bucket = 2").count() == 10
 
 
+def test_read_with_known_schema(spark, wh):
+    """``read(schema=...)`` launches no schema-inference job (without it,
+    Spark reads the footers in a job), and a file-less partition dir — a
+    zero-row partitioned write — reads as an empty frame of that schema."""
+    import pyspark.sql.functions as F
+
+    schema = "v bigint, wave int, bucket int"  # partition cols in path order
+    _write(spark, wh, "t", 0, 40, partition_by=["bucket"])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("read_inferred", "read_inferred")
+        inferred = wh.read(spark, "t", wave=0)
+        sc.setJobGroup("read_known", "read_known")
+        df = wh.read(spark, "t", wave=0, schema=schema)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("read_inferred")
+    assert tracker.getJobIdsForGroup("read_known") == []
+    assert df.schema == inferred.schema
+    assert df.schema.simpleString() == "struct<v:bigint,wave:int,bucket:int>"
+    assert df.count() == 40 and df.filter("bucket = 2 AND wave = 0").count() == 10
+
+    wh.overwrite_partition(
+        "t", 1, spark.range(0).withColumnRenamed("id", "v")
+        .withColumn("bucket", F.lit(0)), partition_by=["bucket"]
+    )
+    assert not any(wh.part_dir("t", 1).rglob("*.parquet"))
+    empty = wh.read(spark, "t", wave=1, schema=schema)
+    assert empty.schema == inferred.schema
+    assert empty.count() == 0
+
+
 def test_partition_rows_from_footers(spark, wh):
     """Footer counts: totals (sub-partitioned and empty writes too) and
     per-key counts; a row group that mixes keys fails loudly."""
