@@ -30,7 +30,7 @@ so a Spark event log ties each job to its wave and phase:
     job_images_udf      plan-fetch (budget split, max_render_tasks cap),
                         fetch-render, images(w) write
     job_edges           links: resolved, fetch_log(w) + edges(w) writes
-    admit_plan          admit: candidates, first-wins, shard prune, plan
+    admit_plan          admit: candidates, first-wins, flag split, plan
     job_seen            seen(w+1) write (runs the admission chain)
     job_frontier        frontier(w+1) = deferred ∪ unblocked seen(w+1)
     job_bloom           fold seen(w+1) into the Bloom/cuckoo state
@@ -53,11 +53,11 @@ Scale notes (designed for 10^10-URL frontiers, tested on local[32]):
 * frontier/seen/edges/images are wave-partitioned parquet — every wave's
   state is re-read from disk, so plan lineage never grows across waves and
   partition pruning confines reads to the waves named.
-* the seen table is additionally Hive-sub-partitioned by ``shard``; the
-  per-wave anti-join reads ONLY the shards the maybe-seen candidates name
-  (partition-pruned scan), and ``seen_compact_every`` folds old wave
-  partitions into one snapshot so the recurring read is one snapshot +
-  bounded deltas instead of O(waves) partitions (tests/test_seen_scale.py).
+* the seen table is additionally Hive-sub-partitioned by ``shard`` (the
+  prefilter's shard), so a shard predicate is a partition-pruned scan,
+  and ``seen_compact_every`` folds old wave partitions into one snapshot
+  so the recurring read is one snapshot + bounded deltas instead of
+  O(waves) partitions (tests/test_seen_scale.py).
 * the two per-wave shuffles (host-salt window; url_hash dedup/anti-join)
   are the only wide stages; the Bloom/cuckoo prefilter routes the
   overwhelmingly-new candidate mass AROUND the anti-join (SURVEY.md §4.1).
@@ -65,10 +65,9 @@ Scale notes (designed for 10^10-URL frontiers, tested on local[32]):
   row-sized) and are broadcast to every executor (right while total
   blob bytes << executor memory), where the fetch kernel probes every
   link it emits (``hashing.xxhash64_utf8`` ≡ Spark's ``xxhash64``), so
-  admission is JVM-only; ``bloom_mode="off"`` drops the prefilter and
-  leaves the pure exact anti-join.  ``filter_kind`` picks
-  Bloom bits or a cuckoo table (deletion support) behind the same
-  contract (operators/seenfilter.py).
+  admission is JVM-only and the probe runs in every wave (north rule).
+  ``filter_kind`` picks Bloom bits or a cuckoo table (deletion support)
+  behind the same contract (operators/seenfilter.py).
 * seen and frontier reads pass their known schemas
   (``SEEN_READ_SCHEMA``, ``FRONTIER_READ_SCHEMA``): no read starts a
   schema-inference job over the parquet footers.
@@ -118,8 +117,7 @@ SEEN_READ_SCHEMA = (
     "blocked boolean, wave int, shard int"
 )
 #: the seen table (and its compacted snapshots) is Hive-sub-partitioned by
-#: shard, so the anti-join's seen-side scan can be pruned to the shards
-#: the maybe-seen candidates name
+#: the prefilter's shard, so a shard predicate prunes the scan to its dirs
 SEEN_PARTITION_BY = ["shard"]
 #: ``links`` is the page's raw hrefs, SEP-packed (fetch_log keeps them);
 #: ``dsts`` is the same hrefs canonicalized, position for position;
@@ -291,8 +289,6 @@ class CrawlEngine:
         max_render_tasks: int | None = None,  # global cumulative fetch cap
         # (crawl_semantics rule 7, reference --max-render-tasks semantics)
         n_salt: int = 8,
-        n_shards: int = N_SHARDS,
-        bloom_mode: str = "broadcast",  # or "off" (pure exact anti-join)
         filter_kind: str = "bloom",  # or "cuckoo" (deletion support;
         # north rule names "Bloom/cuckoo" — seenfilter.py dispatch)
         n_partitions: int | None = None,
@@ -311,12 +307,7 @@ class CrawlEngine:
         self.budget = cfg.budget
         self.max_render_tasks = max_render_tasks
         self.n_salt = n_salt
-        self.n_shards = n_shards
-        if bloom_mode not in ("broadcast", "off"):
-            raise ValueError(
-                f"bloom_mode must be 'broadcast' or 'off', not {bloom_mode!r}"
-            )
-        self.bloom_mode = bloom_mode
+        self.n_shards = N_SHARDS
         assert filter_kind in seenfilter.KINDS, filter_kind
         self.filter_kind = filter_kind
         self.filter_params = FILTER_PARAMS
@@ -338,26 +329,19 @@ class CrawlEngine:
         wave_dir=None,
         n_rows: int | None = None,
     ) -> None:
-        """Fold a wave's seen-additions into the Bloom state: per-shard
-        blobs merged on the driver (bits-sized, never row-sized), then
-        re-broadcast.
+        """Fold a wave's seen-additions into the prefilter state:
+        per-shard blobs merged on the driver (bits-sized, never
+        row-sized), then re-broadcast.
 
         Fast path: when the wave's additions are a SMALL just-written
         parquet partition (``wave_dir`` + ``n_rows``), the driver reads
         the two key columns with pyarrow and builds the blobs in-process
-        — no Spark job.  Bloom bits are an order-independent OR, so the
-        blobs are byte-identical to the distributed build; the cuckoo
-        kind is order-sensitive and keeps the Spark path.  Large waves
-        (or resume, which passes no wave_dir) keep the distributed
-        build."""
-        if self.bloom_mode == "off":
-            return
-        if (
-            wave_dir is not None
-            and n_rows is not None
-            and self.filter_kind == "bloom"
-            and n_rows <= 2_000_000
-        ):
+        — no Spark job.  Either kind's blob depends only on the shard's
+        hash set (Bloom bits are an order-independent OR; the cuckoo
+        build inserts the sorted unique hashes), so it is byte-identical
+        to the distributed build.  Large waves (or resume, which passes
+        no wave_dir) keep the distributed build."""
+        if wave_dir is not None and n_rows is not None and n_rows <= 2_000_000:
             blobs = []
             if n_rows > 0:
                 import pyarrow.dataset as _pads
@@ -395,80 +379,31 @@ class CrawlEngine:
 
     # ----------------------------------------------------- admission
 
-    def _admit(
-        self,
-        candidates: DataFrame,
-        seen: DataFrame | None,
-        *,
-        cand_hint: int | None = None,
-    ) -> tuple[DataFrame, int | None]:
+    def _admit(self, candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
         """Dedup candidates against the seen set (C1/C2), gate by robots
-        (B3); returns (seen_additions, seen shards scanned), the count None
-        when no prefilter ran.  No Python runs here: the fetch kernel
-        already probed the prefilter for every link.
+        (B3); returns the seen additions.  No Python runs here: the fetch
+        kernel already probed the prefilter for every link.
 
-        candidates: (url, host, depth, seq, _maybe), first-wins-deduped
-        and cached; ``_maybe`` is the kernel's prefilter verdict (absent
-        for the seeds, which have no seen set to check).  Sure-new rows
+        candidates: (url, host, depth, seq, _maybe), first-wins-deduped;
+        ``_maybe`` is the kernel's prefilter verdict (absent for the
+        seeds, which have no seen set to check).  Sure-new rows
         (``_maybe`` false) skip the exact anti-join; maybe-seen rows go
         through it, so it stays authoritative and the filter's zero
-        false negatives keep the result exact.
-        ``cand_hint``: upper bound on the candidate count (the wave's link
-        observation).  When it is large relative to ``n_shards`` the
-        maybe-seen candidates hit every shard with near-certainty, so the
-        shard-prune collect job (one extra pass over the candidate
-        pipeline per wave) is skipped — the exact anti-join then simply
-        reads all shards, which is what the prune would have concluded
-        anyway.  Pruning still runs for small waves, where it pays.
-        """
-        cand = candidates.withColumn("url_hash", F.xxhash64("url")).withColumn(
+        false negatives keep the result exact."""
+        new = candidates.withColumn("url_hash", F.xxhash64("url")).withColumn(
             "shard", F.pmod("url_hash", F.lit(self.n_shards)).cast("int")
         )
-        n_scanned = None
         if seen is not None:
-            if self._bc is not None:
-                # prune the seen-side SCAN to shards that can possibly
-                # match: with the seen table Hive-sub-partitioned by shard
-                # this turns the per-wave re-scan of the whole seen set
-                # into a read of only the shards the maybe-seen candidates
-                # name (a tiny <=n_shards-row collect decides the list).
-                # Skipped when the wave's link count guarantees every
-                # shard is hit anyway (see ``cand_hint`` above) — the
-                # collect is a whole extra Spark job per wave.
-                if cand_hint is not None and cand_hint >= 64 * self.n_shards:
-                    n_scanned = self.n_shards
-                else:
-                    shards = sorted(
-                        int(r["shard"])
-                        for r in cand.filter(F.col("_maybe"))
-                        .select("shard")
-                        .distinct()
-                        .collect()
-                    )
-                    n_scanned = len(shards)
-                    if not shards:
-                        seen = seen.filter(F.lit(False))
-                    elif len(shards) < self.n_shards:
-                        seen = seen.filter(F.col("shard").isin(shards))
             # join on url ALONE (url equality implies url_hash equality):
             # the candidate side arrives hash-partitioned by url from the
             # first_wins groupBy, so Catalyst reuses that partitioning and
             # only the SEEN side shuffles
             seen_keys = seen.select("url")
-            if self._bc is not None:
-                sure_new = cand.filter(~F.col("_maybe"))
-                need_check = cand.filter(F.col("_maybe"))
-                # exact anti-join is authoritative; bloom only shrinks it
-                checked = need_check.join(seen_keys, "url", "left_anti")
-                new = sure_new.unionByName(checked)
-            else:
-                new = cand.join(seen_keys, "url", "left_anti")
-        else:
-            new = cand
-        seen_add = with_robots(new, self.robots).select(
+            checked = new.filter(F.col("_maybe")).join(seen_keys, "url", "left_anti")
+            new = new.filter(~F.col("_maybe")).unionByName(checked)
+        return with_robots(new, self.robots).select(
             "url_hash", "url", "host", "depth", "seq", "shard", "blocked"
         )
-        return seen_add, n_scanned
 
     # ----------------------------------------------------- lifecycle
 
@@ -491,7 +426,7 @@ class CrawlEngine:
             .withColumn("host", F.regexp_extract("url", HOST_RE, 1))
             .filter(F.col("url").rlike(HTTP_RE))
         )
-        seen_add, _ = self._admit(first_wins(df), None)
+        seen_add = self._admit(first_wins(df), None)
         n_new = self._write_seen(0, seen_add)
         added, n_frontier = self._write_frontier(0, None)
         self._update_bloom(added, self.wh.part_dir("seen", 0), n_new)
@@ -599,9 +534,7 @@ class CrawlEngine:
         # first pays a local sort of its input for retry determinism
         # (SPARK-23207); hashing by url is deterministic without it and
         # spreads uniformly-costed fetches evenly
-        probe = None if self._bc is None else (
-            self._bc, self.filter_kind, self.filter_params, self.n_shards
-        )
+        probe = (self._bc, self.filter_kind, self.filter_params, self.n_shards)
         pages = (
             plan.fetch.repartition(plan.n_tasks, "url")
             .mapInArrow(make_fetch_render_arrow(self.cfg, probe), PAGE_SCHEMA)
@@ -669,10 +602,13 @@ class CrawlEngine:
         return resolved, self.wh.partition_rows("edges", w), partitions
 
     def _admit_links(
-        self, w: int, resolved: DataFrame, n_links: int, cache: list[DataFrame]
-    ) -> tuple[DataFrame, int | None]:
+        self, w: int, resolved: DataFrame, cache: list[DataFrame]
+    ) -> DataFrame:
         """admit: each link becomes a discovery candidate, first-wins
-        deduped (cached) and admitted against seen(<=w)."""
+        deduped (cached) and admitted against seen(<=w).  Both branches
+        of ``_admit``'s flag split read the candidates, and without the
+        cache AQE does not reuse the first-wins Exchange between them:
+        the seen write would shuffle and aggregate the links twice."""
         # child seq = parent lineage + one hex digit (crawl_semantics rule
         # 1: string lineage never overflows, unlike seq*16+pos on int64)
         cand = first_wins(
@@ -687,7 +623,7 @@ class CrawlEngine:
             )
         ).persist(StorageLevel.MEMORY_AND_DISK)
         cache.append(cand)
-        return self._admit(cand, self._read_seen(w), cand_hint=n_links)
+        return self._admit(cand, self._read_seen(w))
 
     def _write_seen(self, v: int, seen_add: DataFrame) -> int:
         """seen-write: the admitted rows as seen(v); returns their count."""
@@ -769,7 +705,7 @@ class CrawlEngine:
             with phase("job_edges"):
                 resolved, n_links, partitions = self._links(w, pages, cache)
             with phase("admit_plan"):
-                seen_add, n_scanned = self._admit_links(w, resolved, n_links, cache)
+                seen_add = self._admit_links(w, resolved, cache)
             with phase("job_seen"):
                 n_new = self._write_seen(w + 1, seen_add)
             with phase("job_frontier"):
@@ -790,7 +726,6 @@ class CrawlEngine:
                 "n_robots_blocked": n_new - (n_next - n_deferred),
                 "n_frontier_next": n_next,
                 "n_total_fetched": plan.n_total_before + n_fetched,
-                "n_seen_shards_scanned": n_scanned,
                 "seen_compacted_at": compacted_at,
                 "wall_ms": int((time.monotonic() - t0) * 1000),
                 "partitions": partitions,

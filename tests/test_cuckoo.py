@@ -77,27 +77,19 @@ def test_saturation_degrades_to_all_maybe():
 
 def test_engine_equivalent_under_cuckoo(spark, tmp_path):
     """filter_kind='cuckoo' must be invisible to crawl semantics: same
-    seen set and frontier as the pure anti-join (bloom_mode='off')."""
+    seen set and fetch order as the sequential oracle."""
+    from oracle_rendler import run_oracle
     from rendler_spark.engine import CrawlEngine
     from rendler_spark.synthweb import WebConfig
 
     cfg = WebConfig()
-    results = {}
-    runs = {
-        "off": dict(bloom_mode="off"),
-        "cuckoo_bc": dict(bloom_mode="broadcast", filter_kind="cuckoo"),
-    }
-    for name, kw in runs.items():
-        e = CrawlEngine(spark, cfg, str(tmp_path / name), **kw)
-        e.run(2)
-        seen = frozenset(
-            r["url"] for r in e.wh.read(spark, "seen").select("url").collect()
-        )
-        frontier = tuple(
-            sorted(
-                (r["url"], r["depth"], r["seq"])
-                for r in e.wh.read(spark, "frontier", wave=2).collect()
-            )
-        )
-        results[name] = (seen, frontier)
-    assert results["off"] == results["cuckoo_bc"]
+    e = CrawlEngine(spark, cfg, str(tmp_path / "cuckoo"), filter_kind="cuckoo")
+    e.run(2)
+    oracle = run_oracle(cfg, 2)
+    seen = {r["url"] for r in e.wh.read(spark, "seen").select("url").collect()}
+    assert seen == oracle.seen
+    order = sorted(
+        (r["wave"], r["host"], r["depth"], r["seq"], r["url"])
+        for r in e.wh.read(spark, "fetch_log").collect()
+    )
+    assert order == sorted(oracle.fetch_order)

@@ -145,10 +145,10 @@ def multipart(spark, tmp_path_factory):
     plans = []
     admit = eng._admit
 
-    def recording_admit(candidates, seen, **kw):
-        seen_add, n_scanned = admit(candidates, seen, **kw)
+    def recording_admit(candidates, seen):
+        seen_add = admit(candidates, seen)
         plans.append((_explain(spark, candidates), _explain(spark, seen_add)))
-        return seen_add, n_scanned
+        return seen_add
 
     eng._admit = recording_admit
     stats = eng.run(WAVES)
@@ -210,31 +210,6 @@ def test_max_render_tasks_cap(spark, tmp_path):
     )
     want_frontier = sorted((u, d, s) for u, _, d, s in oracle.frontier)
     assert got_frontier == want_frontier and len(got_frontier) > 0
-
-
-def test_bloom_modes_agree(spark, tmp_path):
-    """bloom=off (pure anti-join) and bloom=broadcast produce identical
-    seen sets and frontiers: the prefilter is invisible to semantics."""
-    results = {}
-    for mode in ("off", "broadcast"):
-        e = CrawlEngine(spark, CFG, str(tmp_path / mode), bloom_mode=mode)
-        e.run(2)
-        seen = frozenset(
-            r["url"] for r in e.wh.read(spark, "seen").select("url").collect()
-        )
-        frontier = tuple(
-            sorted(
-                (r["url"], r["depth"], r["seq"])
-                for r in e.wh.read(spark, "frontier", wave=2).collect()
-            )
-        )
-        results[mode] = (seen, frontier)
-    assert results["off"] == results["broadcast"]
-
-
-def test_bloom_mode_rejects_unknown_value(spark, tmp_path):
-    with pytest.raises(ValueError):
-        CrawlEngine(spark, CFG, str(tmp_path / "typo"), bloom_mode="braodcast")
 
 
 def _rows(spark, eng, table, wave, where=None) -> int:

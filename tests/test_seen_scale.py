@@ -1,9 +1,10 @@
-"""Seen-table scale mechanics: shard sub-partitioning, pruned anti-join
-reads, and wave compaction (VERDICT r1 #4).
+"""Seen-table scale mechanics: shard sub-partitioning, the prefilter
+fold, and wave compaction (VERDICT r1 #4).
 
 The seen set is the one table every wave re-reads; these tests pin that
-(a) it is written Hive-sub-partitioned by shard, (b) the anti-join's scan
-is partition-pruned to the shards the maybe-seen candidates name, and
+(a) it is written Hive-sub-partitioned by shard, so a shard predicate
+prunes the scan, (b) the driver's prefilter fold of a written wave
+partition builds the same shard blobs as the distributed build, and
 (c) compaction snapshots replace the O(waves) delta re-scan without
 changing semantics or breaking resume.
 """
@@ -13,7 +14,8 @@ import pytest
 
 from oracle_rendler import run_oracle
 from rendler_spark import synthweb
-from rendler_spark.engine import CrawlEngine
+from rendler_spark.engine import SEEN_READ_SCHEMA, CrawlEngine
+from rendler_spark.operators import seenfilter
 
 CFG = synthweb.WebConfig()  # t1 smoke tier
 
@@ -26,22 +28,40 @@ def _explain(df):
     )
 
 
-def test_seen_sharded_and_antijoin_pruned(spark, tmp_path):
-    """With n_shards larger than the candidate spread, the engine must
-    scan fewer shards than exist, and the shard filter must reach the
-    parquet scan as a PartitionFilter (not a post-scan row filter)."""
-    eng = CrawlEngine(spark, CFG, str(tmp_path / "wh"), n_shards=64)
-    stats = eng.run(2)
-    # (a) Hive shard sub-dirs exist inside the wave partition
+def test_seen_sharded_and_shard_predicate_pruned(spark, tmp_path):
+    """seen is written in shard sub-dirs, and a shard filter over the
+    seen read reaches the parquet scan as a PartitionFilter (not a
+    post-scan row filter)."""
+    eng = CrawlEngine(spark, CFG, str(tmp_path / "wh"))
+    eng.run(1)
+    # Hive shard sub-dirs exist inside the wave partition
     shard_dirs = list((eng.wh.part_dir("seen", 0)).glob("shard=*"))
     assert shard_dirs, "seen/wave=0 not sub-partitioned by shard"
-    # (b) the wave-1 anti-join scanned a strict subset of 64 shards
-    assert 0 < stats[1]["n_seen_shards_scanned"] < 64
-    # (c) a shard predicate over the seen read is partition-pruned
+    # a shard predicate over the seen read is partition-pruned
     pruned = eng._read_seen(1).filter(F.col("shard").isin([1, 2, 3]))
     plan = _explain(pruned)
     part_section = plan.split("PartitionFilters:")[1].splitlines()[0]
     assert "shard" in part_section, plan
+
+
+@pytest.mark.parametrize("kind", seenfilter.KINDS)
+def test_driver_fold_matches_distributed_build(spark, tmp_path, kind):
+    """The wave fold's pyarrow driver build and the applyInPandas build
+    give byte-identical blobs, shard by shard, for either filter kind."""
+    eng = CrawlEngine(spark, CFG, str(tmp_path / kind), filter_kind=kind)
+    eng.run(1)
+    n_rows = eng.wh.partition_rows("seen", 1)
+    added = eng.wh.read(spark, "seen", wave=1, schema=SEEN_READ_SCHEMA)
+    builds = []
+    for fold_args in ((eng.wh.part_dir("seen", 1), n_rows), ()):
+        eng._shard_blobs = {}
+        eng._update_bloom(added, *fold_args)
+        builds.append(eng._shard_blobs)
+    driver, distributed = builds
+    assert n_rows > 0 and len(driver) > 1
+    assert driver.keys() == distributed.keys()
+    for shard, blob in driver.items():
+        assert blob == distributed[shard], shard
 
 
 def test_compaction_preserves_semantics_and_resume(spark, tmp_path):
